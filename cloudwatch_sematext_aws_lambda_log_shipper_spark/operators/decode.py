@@ -1,16 +1,20 @@
 """Decode chain: Kinesis record -> CloudWatch Logs payload rows.
 
 Reference: shipper.js:121-130 —
-    base64 decode   (S2, shipper.js:122)  -> F.unbase64 (JVM builtin)
+    base64 decode   (S2, shipper.js:122)  -> F.try_to_binary (JVM builtin;
+                                             bad base64 -> NULL, not a throw)
     gunzip          (S3, shipper.js:123)  -> the engine's ONLY Python UDF
                                              (Arrow-batched pandas_udf)
     JSON.parse      (S4, shipper.js:124)  -> F.from_json(ENVELOPE_SCHEMA)
     CONTROL_MESSAGE skip (S5, shipper.js:125) -> filter
+    logEvents.forEach (S8, shipper.js:132) -> explode
 
-Scale notes: the chain is narrow (no shuffle). The gunzip UDF is the one
-Python hop; it transfers the compressed bytes (smaller than the output)
-over Arrow in vectorized batches. Everything before and after stays in
-WholeStageCodegen.
+Scale notes: the chain is narrow (no shuffle). Each record is decoded
+once: the executed ``batch_kernel`` plan holds one ``ArrowEvalPython``
+node (gunzip) and three ``from_json`` calls — the envelope here and the
+parse kernel's two maps (pinned in tests/test_decode.py). The gunzip UDF
+transfers the compressed bytes (smaller than the output) over Arrow in
+vectorized batches.
 """
 
 from __future__ import annotations
@@ -23,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import ENVELOPE_SCHEMA
+from ..schemas import ENVELOPE_SCHEMA, LOG_EVENT_SCHEMA
 
 
 @F.pandas_udf(T.BinaryType())
@@ -77,9 +81,8 @@ def decode_payload(data_b64: Column) -> Column:
     )
 
 
-def decode_records(records: DataFrame, data_col: str = "data",
-                   region_col: str = "awsRegion") -> DataFrame:
-    """Kinesis records (one row per record) -> decoded envelope rows.
+def decode_records(records: DataFrame) -> DataFrame:
+    """Kinesis records (data, awsRegion) -> decoded envelope rows.
 
     Output columns: awsRegion, messageType, logGroup, logStream, logEvents,
     decode_error, _raw_data (original base64 string, kept for DLQ replay).
@@ -95,15 +98,26 @@ def decode_records(records: DataFrame, data_col: str = "data",
     preserving the conservation invariant (every input record reaches
     clean, DLQ, or an intentional CONTROL drop). An empty ``logEvents``
     array is NOT an error: it legitimately contains zero events.
+
+    The decode runs inside a one-element Generate. Catalyst pushes a
+    filter below a projection by inlining the projected expression, so a
+    ``withColumn`` decode ran the gunzip UDF (and a pruned envelope
+    ``from_json``) once for the CONTROL filter and again above it. A
+    filter on a generator's output stays above the Generate, so each
+    record is decoded once.
     """
-    decoded = records.withColumn("_payload", decode_payload(F.col(data_col)))
+    decoded = records.select(
+        "awsRegion",
+        "data",
+        F.inline(F.array(F.struct(decode_payload(F.col("data")).alias("_payload")))),
+    )
     return (
         decoded.filter(
             F.col("_payload.messageType").isNull()
             | (F.col("_payload.messageType") != F.lit("CONTROL_MESSAGE"))
         )
         .select(
-            F.col(region_col).alias("awsRegion"),
+            "awsRegion",
             F.col("_payload.messageType").alias("messageType"),
             F.col("_payload.logGroup").alias("logGroup"),
             F.col("_payload.logStream").alias("logStream"),
@@ -112,22 +126,36 @@ def decode_records(records: DataFrame, data_col: str = "data",
                 F.col("_payload").isNull()
                 | F.col("_payload.logEvents").isNull()
             ).alias("decode_error"),
-            F.col(data_col).alias("_raw_data"),
+            F.col("data").alias("_raw_data"),
         )
     )
 
 
 def explode_log_events(envelopes: DataFrame) -> DataFrame:
     """One output row per log event, parent fields carried (S8,
-    shipper.js:132-137). Narrow op — no shuffle."""
+    shipper.js:132-137). Narrow op — no shuffle.
+
+    Output: awsRegion, logGroup, logStream, message, _raw. A
+    decode_error envelope yields exactly one row with a NULL message,
+    NULL logGroup/logStream and its base64 record as ``_raw``; the parse
+    kernel turns that row into a decode-class DLQ row (every derived
+    column NULL, so ``replay_dlq`` selects it). ``_raw`` is NULL on
+    every other row.
+    """
+    err = F.col("decode_error")
     return envelopes.select(
         "awsRegion",
-        "logGroup",
-        "logStream",
-        F.explode("logEvents").alias("logEvent"),
+        F.when(~err, F.col("logGroup")).alias("logGroup"),
+        F.when(~err, F.col("logStream")).alias("logStream"),
+        F.when(err, F.col("_raw_data")).alias("_raw"),
+        F.explode(
+            F.when(err, F.array(F.lit(None).cast(LOG_EVENT_SCHEMA)))
+            .otherwise(F.col("logEvents"))
+        ).alias("logEvent"),
     ).select(
         "awsRegion",
         "logGroup",
         "logStream",
         F.col("logEvent.message").alias("message"),
+        "_raw",
     )

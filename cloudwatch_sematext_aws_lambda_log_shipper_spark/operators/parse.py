@@ -79,20 +79,16 @@ def _variant_str(v: Column, path: str) -> Column:
     return F.try_variant_get(v, path, "string")
 
 
-# A/B profiling knob (scripts/profile_variant.py): "variant" is the
-# production kernel (typed MAP<STRING,VARIANT> attributes); "string"
-# reproduces the pre-variant kernel (attributes from the already-computed
-# string _user_map, no second from_json) so the two parse plans can be
-# timed against each other in one session. Not a user-facing switch.
-_ATTR_MODE = "variant"
-
-
 def parse_log_events(events: DataFrame) -> DataFrame:
     """(awsRegion, logGroup, logStream, message) -> log records.
 
     Output: LOG_SCHEMA columns plus the input message as _raw for DLQ
     context. Platform messages (S9) are dropped; Q4-class rows are kept
     with is_corrupt=true (route with :func:`split_dlq`).
+
+    An optional ``_raw`` input column (``explode_log_events`` emits it)
+    is the ``_raw`` of a NULL-message row: a decode-error record carries
+    its base64 payload there.
     """
     msg = F.col("message")
 
@@ -132,13 +128,9 @@ def parse_log_events(events: DataFrame) -> DataFrame:
     # string _user_map above exists only for the override columns, which
     # are strings anyway). One extra from_json over the json branch —
     # JVM-side, codegen'd, no measurable hot-path cost.
-    attr_source = (
-        F.from_json(msg, "map<string,variant>")
-        if _ATTR_MODE == "variant"
-        else F.col("_user_map")  # profiling arm: r5 stringified kernel
-    )
     attr_map = F.map_filter(
-        attr_source, lambda k, _: ~k.isin(_RESERVED_JSON_KEYS)
+        F.from_json(msg, "map<string,variant>"),
+        lambda k, _: ~k.isin(_RESERVED_JSON_KEYS),
     )
 
     def user_override(key: str, derived: Column) -> Column:
@@ -191,7 +183,8 @@ def parse_log_events(events: DataFrame) -> DataFrame:
         .otherwise(error_type)
         .alias("error.type"),
         (branch == "corrupt").alias("is_corrupt"),
-        msg.alias("_raw"),
+        (F.coalesce(msg, F.col("_raw")) if "_raw" in events.columns else msg)
+        .alias("_raw"),
     )
     return out
 

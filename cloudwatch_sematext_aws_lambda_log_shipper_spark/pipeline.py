@@ -5,9 +5,14 @@ Streaming (streaming/pipeline.py wraps it) — idiomatic Spark: one code
 path, two execution modes.
 
 Dataflow parity with shipper.js handler (EP1, SURVEY.md §3):
-  read -> decode (S2-S4) -> CONTROL filter (S5) -> explode (S8)
-       -> parse kernel (S6-S14) -> observe counters (S15)
+  read -> decode (S2-S4) -> CONTROL filter (S5) -> observe counters (S15)
+       -> explode (S8) -> parse kernel (S6-S14)
        -> clean/DLQ split (S17) -> sinks (S16)
+
+Each record is decoded once and stays in one row stream: a record that
+fails to decode becomes one NULL-message row in the explode, and the
+parse kernel tags it is_corrupt like any other corrupt row, so no
+second branch or union is needed.
 """
 
 from __future__ import annotations
@@ -38,32 +43,15 @@ def parse_kinesis_records(
     fix over the reference's batch-poisoning catch, shipper.js:154-159).
     """
     envelopes = decode_records(records)
-    good = envelopes.filter(~F.col("decode_error"))
-    bad = envelopes.filter(F.col("decode_error"))
     if observe is not False:
         obs = observe if isinstance(observe, Observation) else "shipper_metrics"
-        good = good.observe(
+        ok = ~F.col("decode_error")
+        envelopes = envelopes.observe(
             obs,
-            F.count(F.lit(1)).alias("record_counter"),
-            F.sum(F.size("logEvents")).alias("log_event_counter"),
+            F.count(F.when(ok, 1)).alias("record_counter"),
+            F.sum(F.when(ok, F.size("logEvents"))).alias("log_event_counter"),
         )
-    parsed = parse_log_events(explode_log_events(good))
-    null_str = F.lit(None).cast("string")
-    decode_dlq = bad.select(
-        null_str.alias("function.name"),
-        null_str.alias("function.version"),
-        null_str.alias("@timestamp"),
-        null_str.alias("function.request.id"),
-        null_str.alias("message"),
-        F.lit(None).cast("map<string,variant>").alias("attributes"),
-        F.col("awsRegion").alias("region"),
-        F.lit("lambda").alias("type"),
-        F.lit("debug").alias("severity"),
-        null_str.alias("error.type"),
-        F.lit(True).alias("is_corrupt"),
-        F.col("_raw_data").alias("_raw"),
-    )
-    return parsed.unionByName(decode_dlq)
+    return parse_log_events(explode_log_events(envelopes))
 
 
 def batch_kernel(

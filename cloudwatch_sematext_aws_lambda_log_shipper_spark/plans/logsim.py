@@ -593,7 +593,8 @@ def _synth_replay_dlq_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(gzip_b64_udf(payload))
     null_str = F.lit(None).cast("string")
     # decode-class DLQ rows, exactly the shape parse_kinesis_records
-    # lands for decode failures (pipeline.py decode_dlq)
+    # lands for decode failures (the parse kernel's output for the
+    # NULL-message row explode_log_events emits per decode error)
     return events.select(
         null_str.alias("function.name"),
         null_str.alias("function.version"),

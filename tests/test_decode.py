@@ -211,3 +211,34 @@ def test_null_message_routes_to_dlq(spark):
     clean, dlq = run_batch(df)
     assert [r["message"] for r in clean.collect()] == ["fine"]
     assert dlq.count() == 1
+
+
+def test_batch_kernel_decodes_each_record_once(spark):
+    """Plan pin: the executed batch_kernel plan runs the gunzip UDF in ONE
+    ArrowEvalPython node and holds at most three from_json calls (the
+    envelope, and the parse kernel's string and variant attribute maps),
+    over a batch that has every decode edge class: CONTROL, bad base64,
+    valid base64 that is not gzip, ``{}``, and an envelope with a
+    logGroup but no logEvents. A filter pushed under the decode, or a
+    second branch over the decoded records, multiplies both counts."""
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.pipeline import batch_kernel
+
+    df = spark.createDataFrame(
+        [
+            Row(data=gzip_b64(make_payload(['{"message":"m","k":1}', "plain"])),
+                awsRegion="r"),
+            Row(data=gzip_b64(make_payload(["c"], message_type="CONTROL_MESSAGE")),
+                awsRegion="r"),
+            Row(data="!!!not-base64!!!", awsRegion="r"),
+            Row(data="AAAA", awsRegion="r"),
+            Row(data=gzip_b64("{}"), awsRegion="r"),
+            Row(data=gzip_b64(json.dumps({"logGroup": "/aws/lambda/f"})),
+                awsRegion="r"),
+        ]
+    )
+    parsed = batch_kernel(df, observe=False, fan_out=True)
+    rows = parsed.collect()
+    assert sorted(r["is_corrupt"] for r in rows) == [False, False] + [True] * 4
+    plan = parsed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("from_json(") <= 3, plan

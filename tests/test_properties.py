@@ -133,6 +133,19 @@ def test_full_pipeline_conservation(spark, payload_groups, corrupt, eventless):
     expected = n_events - n_platform + len(corrupt) + len(eventless)
     assert clean.count() + dlq.count() == expected
     assert dlq.count() >= len(corrupt) + len(eventless)
+    # ... and that row is decode-class: every derived column NULL and the
+    # input base64 kept as _raw, so replay_dlq's predicate selects it.
+    # The eventless envelopes carry logGroup "/aws/lambda/f": a
+    # function.name derived from it would make the row unreplayable.
+    undecodable = sorted(r.data for r in recs[len(payload_groups):])
+    decode_rows = dlq.filter(
+        F.col("message").isNull()
+        & F.col("_raw").isNotNull()
+        & F.col("`function.name`").isNull()
+    ).collect()
+    assert sorted(r["_raw"] for r in decode_rows) == undecodable
+    for r in decode_rows:
+        assert r["function.version"] is None and r["@timestamp"] is None
 
 
 @settings(
