@@ -11,6 +11,13 @@ import os
 from dataclasses import dataclass, field
 
 
+def local_cpus() -> int:
+    """Task slots for a local session: ``SPARK_GRAFT_CPUS`` when set,
+    else the cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 @dataclass(frozen=True)
 class EngineConfig:
     # Data plane (reference: serverless.yml:24-37)
@@ -33,7 +40,7 @@ class EngineConfig:
     # Spark tuning — local defaults; on a real cluster these come from
     # spark-submit conf. shuffle_partitions should be ~2-3x total cores
     # at 100 TB (e.g. 8000 on a 1000-executor cluster); AQE coalesces.
-    shuffle_partitions: int = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    shuffle_partitions: int = local_cpus()
 
     extra_spark_conf: dict = field(default_factory=dict)
 

@@ -14,7 +14,8 @@ once: the executed ``batch_kernel`` plan holds one ``ArrowEvalPython``
 node (gunzip) and three ``from_json`` calls — the envelope here and the
 parse kernel's two maps (pinned in tests/test_decode.py). The gunzip UDF
 transfers the compressed bytes (smaller than the output) over Arrow in
-vectorized batches.
+vectorized batches. The chain's Column expressions are built once per
+process (``built_once``); a micro-batch only applies them.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import built_once
 from ..schemas import ENVELOPE_SCHEMA, LOG_EVENT_SCHEMA
 
 
@@ -106,29 +108,32 @@ def decode_records(records: DataFrame) -> DataFrame:
     filter on a generator's output stays above the Generate, so each
     record is decoded once.
     """
-    decoded = records.select(
-        "awsRegion",
-        "data",
+    decode, keep, envelope = _decode_exprs()
+    return records.select(*decode).filter(keep).select(*envelope)
+
+
+@built_once
+def _decode_exprs() -> tuple[list[Column], Column, list[Column]]:
+    """decode_records' decode select, CONTROL filter and output select."""
+    message_type = F.col("_payload.messageType")
+    decode = [
+        F.col("awsRegion"),
+        F.col("data"),
         F.inline(F.array(F.struct(decode_payload(F.col("data")).alias("_payload")))),
-    )
-    return (
-        decoded.filter(
-            F.col("_payload.messageType").isNull()
-            | (F.col("_payload.messageType") != F.lit("CONTROL_MESSAGE"))
-        )
-        .select(
-            "awsRegion",
-            F.col("_payload.messageType").alias("messageType"),
-            F.col("_payload.logGroup").alias("logGroup"),
-            F.col("_payload.logStream").alias("logStream"),
-            F.col("_payload.logEvents").alias("logEvents"),
-            (
-                F.col("_payload").isNull()
-                | F.col("_payload.logEvents").isNull()
-            ).alias("decode_error"),
-            F.col("data").alias("_raw_data"),
-        )
-    )
+    ]
+    keep = message_type.isNull() | (message_type != F.lit("CONTROL_MESSAGE"))
+    envelope = [
+        F.col("awsRegion"),
+        message_type.alias("messageType"),
+        F.col("_payload.logGroup").alias("logGroup"),
+        F.col("_payload.logStream").alias("logStream"),
+        F.col("_payload.logEvents").alias("logEvents"),
+        (
+            F.col("_payload").isNull() | F.col("_payload.logEvents").isNull()
+        ).alias("decode_error"),
+        F.col("data").alias("_raw_data"),
+    ]
+    return decode, keep, envelope
 
 
 def explode_log_events(envelopes: DataFrame) -> DataFrame:
@@ -142,9 +147,16 @@ def explode_log_events(envelopes: DataFrame) -> DataFrame:
     column NULL, so ``replay_dlq`` selects it). ``_raw`` is NULL on
     every other row.
     """
+    explode, event = _explode_exprs()
+    return envelopes.select(*explode).select(*event)
+
+
+@built_once
+def _explode_exprs() -> tuple[list[Column], list[Column]]:
+    """explode_log_events' two selects."""
     err = F.col("decode_error")
-    return envelopes.select(
-        "awsRegion",
+    explode = [
+        F.col("awsRegion"),
         F.when(~err, F.col("logGroup")).alias("logGroup"),
         F.when(~err, F.col("logStream")).alias("logStream"),
         F.when(err, F.col("_raw_data")).alias("_raw"),
@@ -152,10 +164,12 @@ def explode_log_events(envelopes: DataFrame) -> DataFrame:
             F.when(err, F.array(F.lit(None).cast(LOG_EVENT_SCHEMA)))
             .otherwise(F.col("logEvents"))
         ).alias("logEvent"),
-    ).select(
-        "awsRegion",
-        "logGroup",
-        "logStream",
+    ]
+    event = [
+        F.col("awsRegion"),
+        F.col("logGroup"),
+        F.col("logStream"),
         F.col("logEvent.message").alias("message"),
-        "_raw",
-    )
+        F.col("_raw"),
+    ]
+    return explode, event

@@ -4,7 +4,11 @@ Re-expresses parseLog/splitStructuredLog/checkLogError
 (shipper.js:50-112, :31-49) as a single pure DataFrame transform shared
 by batch and streaming. The three-way dispatch (JSON / structured /
 plain) is one ``when`` chain over a once-computed Variant column — no
-double JSON parse, no Python in the hot path, fully WholeStageCodegen.
+Python in the hot path, fully WholeStageCodegen. Each message is
+JSON-parsed once (``try_parse_json``); JSON-branch rows are parsed twice
+more, into the string map the override columns read and the variant
+map behind ``attributes``. The kernel's Column expressions are built
+once per process (``built_once``); each call only applies them.
 
 Verified bug-compatibility decisions (SURVEY.md §1.4):
   Q1 replicated — severity precedence: generic 'error' wins, so
@@ -52,6 +56,7 @@ from pyspark.sql import functions as F
 
 from ..functions import (
     STRUCTURED_LOG_PATTERN,
+    built_once,
     is_platform_message,
     lambda_name,
     lambda_version,
@@ -90,44 +95,52 @@ def parse_log_events(events: DataFrame) -> DataFrame:
     is the ``_raw`` of a NULL-message row: a decode-error record carries
     its base64 payload there.
     """
+    k = _parse_exprs()
+    raw = k["raw_or_message"] if "_raw" in events.columns else k["message_raw"]
+    return (
+        events.filter(k["keep"])
+        # Each dispatch input is its own projected column, computed once
+        # per row and read by the columns above it.
+        .select(k["star"], *k["inputs"])
+        .select(k["star"], k["json_ok"])
+        .select(k["star"], *k["dispatch"])
+        .select(*k["out"], raw)
+    )
+
+
+@built_once
+def _parse_exprs() -> dict:
+    """parse_log_events' filter, dispatch columns and output projection,
+    and split_dlq's predicates."""
     msg = F.col("message")
 
     # Null messages are routed to the DLQ (is_corrupt=true) rather than
     # silently dropped — consistent with the engine's fix-Q4-via-DLQ
     # stance (the reference crashed the batch on a null message).
-    df = events.filter(msg.isNull() | ~is_platform_message(msg))
-
-    # Compute the dispatch inputs once each.
-    v = F.try_parse_json(msg)
-    df = df.withColumn("_v", v)
-    json_ok = F.col("_v").isNotNull() & (
-        F.expr("schema_of_variant(try_variant_get(_v, '$.message'))") == "STRING"
-    )
-    structured = msg.rlike(STRUCTURED_LOG_PATTERN)
-    parts = F.split(msg, "\t")
-    df = (
-        df.withColumn("_json_ok", json_ok)
-        .withColumn("_parts", parts)
-        # Residual user-JSON map, computed ONCE (was inlined 5x; Catalyst
-        # CSE usually collapses that, but an explicit column is guaranteed).
-        .withColumn("_user_map", F.from_json(msg, "map<string,string>"))
-        .withColumn(
-            "_branch",
-            F.when(msg.isNull(), F.lit("corrupt"))
-            .when(F.col("_json_ok"), F.lit("json"))
-            .when(structured & (F.size("_parts") >= 3), F.lit("structured"))
-            .when(structured, F.lit("corrupt"))  # Q4 class
-            .otherwise(F.lit("plain")),
-        )
-    )
+    keep = msg.isNull() | ~is_platform_message(msg)
 
     vcol = F.col("_v")
     p = F.col("_parts")
+    json_ok = vcol.isNotNull() & (
+        F.expr("schema_of_variant(try_variant_get(_v, '$.message'))") == "STRING"
+    )
+    structured = msg.rlike(STRUCTURED_LOG_PATTERN)
+    branch_col = (
+        F.when(msg.isNull(), F.lit("corrupt"))
+        .when(F.col("_json_ok"), F.lit("json"))
+        .when(structured & (F.size(p) >= 3), F.lit("structured"))
+        .when(structured, F.lit("corrupt"))  # Q4 class
+        .otherwise(F.lit("plain"))
+    )
+    # String map of the user JSON, read only by the JSON branch's override
+    # columns, so only JSON-branch rows parse it.
+    user_map_col = F.when(F.col("_json_ok"), F.from_json(msg, "map<string,string>"))
+
+    user_map = F.col("_user_map")
     # Residual attribute map for the JSON branch: variant values keep
     # nested objects/arrays/numbers TYPED all the way to the sink (the
     # string _user_map above exists only for the override columns, which
-    # are strings anyway). One extra from_json over the json branch —
-    # JVM-side, codegen'd, no measurable hot-path cost.
+    # are strings anyway).
     attr_map = F.map_filter(
         F.from_json(msg, "map<string,variant>"),
         lambda k, _: ~k.isin(_RESERVED_JSON_KEYS),
@@ -138,8 +151,8 @@ def parse_log_events(events: DataFrame) -> DataFrame:
         derived value even when its value is null ({"function.name":null}
         ships name=null). map_contains_key gate, not coalesce."""
         return F.when(
-            F.map_contains_key(F.col("_user_map"), F.lit(key)),
-            F.element_at(F.col("_user_map"), key),
+            F.map_contains_key(user_map, F.lit(key)),
+            F.element_at(user_map, key),
         ).otherwise(derived)
 
     branch = F.col("_branch")
@@ -165,28 +178,37 @@ def parse_log_events(events: DataFrame) -> DataFrame:
     version_derived = lambda_version(F.col("logStream"))
     severity, error_type = severity_columns(message_out)
 
-    out = df.select(
-        F.when(branch == "json", user_override("function.name", name_derived))
-        .otherwise(name_derived)
-        .alias("function.name"),
-        F.when(branch == "json", user_override("function.version", version_derived))
-        .otherwise(version_derived)
-        .alias("function.version"),
-        timestamp_out.alias("@timestamp"),
-        request_id_out.alias("function.request.id"),
-        message_out.alias("message"),
-        F.when(branch == "json", attr_map).alias("attributes"),
-        F.col("awsRegion").alias("region"),
-        F.lit("lambda").alias("type"),
-        F.when(branch == "corrupt", F.lit("debug")).otherwise(severity).alias("severity"),
-        F.when(branch == "corrupt", F.lit(None).cast("string"))
-        .otherwise(error_type)
-        .alias("error.type"),
-        (branch == "corrupt").alias("is_corrupt"),
-        (F.coalesce(msg, F.col("_raw")) if "_raw" in events.columns else msg)
-        .alias("_raw"),
-    )
-    return out
+    corrupt = F.col("is_corrupt")
+    return {
+        "keep": keep,
+        "star": F.col("*"),
+        "inputs": [F.try_parse_json(msg).alias("_v"), F.split(msg, "\t").alias("_parts")],
+        "json_ok": json_ok.alias("_json_ok"),
+        "dispatch": [user_map_col.alias("_user_map"), branch_col.alias("_branch")],
+        "out": [
+            F.when(branch == "json", user_override("function.name", name_derived))
+            .otherwise(name_derived)
+            .alias("function.name"),
+            F.when(branch == "json", user_override("function.version", version_derived))
+            .otherwise(version_derived)
+            .alias("function.version"),
+            timestamp_out.alias("@timestamp"),
+            request_id_out.alias("function.request.id"),
+            message_out.alias("message"),
+            F.when(branch == "json", attr_map).alias("attributes"),
+            F.col("awsRegion").alias("region"),
+            F.lit("lambda").alias("type"),
+            F.when(branch == "corrupt", F.lit("debug")).otherwise(severity).alias("severity"),
+            F.when(branch == "corrupt", F.lit(None).cast("string"))
+            .otherwise(error_type)
+            .alias("error.type"),
+            (branch == "corrupt").alias("is_corrupt"),
+        ],
+        "raw_or_message": F.coalesce(msg, F.col("_raw")).alias("_raw"),
+        "message_raw": msg.alias("_raw"),
+        "corrupt": corrupt,
+        "clean": ~corrupt,
+    }
 
 
 def split_dlq(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -195,6 +217,7 @@ def split_dlq(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     Returns (clean, dlq). clean drops the engine-internal _raw column;
     dlq keeps it for replay.
     """
-    clean = parsed.filter(~F.col("is_corrupt")).drop("_raw")
-    dlq = parsed.filter(F.col("is_corrupt"))
+    k = _parse_exprs()
+    clean = parsed.filter(k["clean"]).drop("_raw")
+    dlq = parsed.filter(k["corrupt"])
     return clean, dlq

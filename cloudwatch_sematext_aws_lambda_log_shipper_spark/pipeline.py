@@ -17,9 +17,10 @@ second branch or union is needed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .functions import built_once
 from .operators.decode import decode_records, explode_log_events
 from .operators.parse import parse_log_events, split_dlq
 from .sources.kinesis import read_kinesis_event_file  # noqa: F401 (re-export)
@@ -45,13 +46,29 @@ def parse_kinesis_records(
     envelopes = decode_records(records)
     if observe is not False:
         obs = observe if isinstance(observe, Observation) else "shipper_metrics"
-        ok = ~F.col("decode_error")
-        envelopes = envelopes.observe(
-            obs,
-            F.count(F.when(ok, 1)).alias("record_counter"),
-            F.sum(F.when(ok, F.size("logEvents"))).alias("log_event_counter"),
-        )
+        envelopes = envelopes.observe(obs, *_observe_exprs())
     return parse_log_events(explode_log_events(envelopes))
+
+
+@built_once
+def _observe_exprs() -> list[Column]:
+    ok = ~F.col("decode_error")
+    return [
+        F.count(F.when(ok, 1)).alias("record_counter"),
+        F.sum(F.when(ok, F.size("logEvents"))).alias("log_event_counter"),
+    ]
+
+
+# Planned input size from which batch_kernel(fan_out=True) repartitions
+# (see its docstring for the measurement).
+FAN_OUT_MIN_BYTES = 1 << 20
+
+
+def _planned_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df``: the bytes of a file
+    source's files; a source that cannot tell reports
+    spark.sql.defaultSizeInBytes (Long.MaxValue)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def batch_kernel(
@@ -66,12 +83,23 @@ def batch_kernel(
     drifted into separate compositions).
 
     fan_out: repartition the RAW records (small: compressed payloads)
-    to cluster parallelism before the gunzip UDF when the input arrives
-    in fewer partitions than cores — a Kinesis/file micro-batch has as
-    many partitions as source shards/files, and gunzip is the
-    pipeline's CPU.
+    to cluster parallelism before the gunzip UDF — gunzip is the
+    pipeline's CPU, and a Kinesis/file micro-batch has only as many
+    partitions as source shards/files. The shuffle is a fixed cost per
+    batch, so it runs only when the batch's planned input size is at
+    least FAN_OUT_MIN_BYTES (1 MiB) and the batch arrives in fewer
+    partitions than cores. The size is checked first: it reads the
+    optimizer's estimate, while the partition count compiles the plan.
+    A source with no size estimate (Kinesis) reports Long.MaxValue and
+    still fans out.
+
+    Measured on single-file micro-batches of ~100-event JSON records,
+    local[2] on a 4-core host, median per-batch p50 without / with
+    fan-out over alternated pairs: 358 KB 1.72 / 1.61 s (6 pairs, within
+    noise), 1.07 MB 2.54 / 2.08 s (4 pairs), 3.56 MB 4.58 / 2.97 s
+    (2 pairs).
     """
-    if fan_out:
+    if fan_out and _planned_bytes(records) >= FAN_OUT_MIN_BYTES:
         par = records.sparkSession.sparkContext.defaultParallelism
         if records.rdd.getNumPartitions() < par:
             records = records.repartition(par)

@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .config import DEFAULT_CONFIG, EngineConfig
+from .config import DEFAULT_CONFIG, EngineConfig, local_cpus
 
 
 def get_spark(
@@ -18,9 +18,8 @@ def get_spark(
     config: EngineConfig = DEFAULT_CONFIG,
     master: str | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
-        SparkSession.builder.master(master or f"local[{cpus}]")
+        SparkSession.builder.master(master or f"local[{local_cpus()}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(config.shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

@@ -80,10 +80,13 @@ class StreamingShipper:
         # neither changes a value, both cut wall-clock):
         # 1. FAN OUT the decode (batch_kernel(fan_out=True)): a
         #    file/Kinesis micro-batch arrives in as few partitions as
-        #    source files/shards (measured: 3 partitions for the
-        #    20k-record bench batch on 32 cores), and the gunzip UDF is
-        #    the pipeline's CPU; repartitioning the raw records (small:
-        #    compressed payloads) spreads it across every core.
+        #    source files/shards, and the gunzip UDF is the pipeline's
+        #    CPU; repartitioning the raw records (small: compressed
+        #    payloads) spreads it across every core. The shuffle costs
+        #    more than it saves on a small batch, so batch_kernel does it
+        #    only from FAN_OUT_MIN_BYTES (1 MiB) of planned input up.
+        #    The kernel's expressions are built once per process, so
+        #    this call only analyses and runs them.
         # 2. MATERIALIZE the parsed batch once: clean and DLQ are two
         #    filter branches of one parse pipeline — written naively,
         #    each write re-runs decode+parse end to end (gunzip twice).

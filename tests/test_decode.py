@@ -242,3 +242,114 @@ def test_batch_kernel_decodes_each_record_once(spark):
     plan = parsed._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
     assert plan.count("from_json(") <= 3, plan
+
+
+def _edge_batch(spark):
+    """Records of every kernel class: JSON with a user override, plain,
+    tab-structured, Q4, platform, null message, CONTROL, bad base64,
+    valid base64 that is not gzip, and ``{}``."""
+    q4 = "2019-03-08T15:58:45.736Z 53499d7f-60f1-476a-adc8-1e6c6125a67c spaced"
+    tab = "2019-03-08T15:58:45.736Z\t53499d7f-60f1-476a-adc8-1e6c6125a67c\tINFO tab"
+    events = json.dumps({
+        "messageType": "DATA_MESSAGE", "logGroup": "/aws/lambda/fn-a",
+        "logStream": "2019/03/08/[7]s1",
+        "logEvents": [{"id": "n", "timestamp": 1, "message": None}],
+    })
+    return spark.createDataFrame(
+        [
+            Row(data=gzip_b64(make_payload([
+                '{"message":"boot error","requestId":"r1","function.name":"o","k":[1]}',
+                "plain", tab, q4, "START RequestId: r1 Version: 1",
+            ])), awsRegion="r"),
+            Row(data=gzip_b64(events), awsRegion="r"),
+            Row(data=gzip_b64(make_payload(["c"], message_type="CONTROL_MESSAGE")),
+                awsRegion="r"),
+            Row(data="!!!not-base64!!!", awsRegion="r"),
+            Row(data="AAAA", awsRegion="r"),
+            Row(data=gzip_b64("{}"), awsRegion="r"),
+        ]
+    )
+
+
+def test_kernel_rebuild_only_applies_prebuilt_expressions(monkeypatch, spark):
+    """Build-cost pin: the kernel's Column expressions are built once per
+    process, so building batch_kernel + split_dlq again over a batch only
+    applies them (~100 Py4J commands). Rebuilding the expressions on
+    every batch sent ~2,400. Py4J's object-release commands depend on
+    Python's garbage collector and are not counted. Both builds must
+    give the same rows."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.parse import split_dlq
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.pipeline import batch_kernel
+
+    df = _edge_batch(spark)
+
+    def build():
+        return split_dlq(batch_kernel(df, fan_out=True))
+
+    first = build()
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    second = build()
+    monkeypatch.undo()
+    assert len(sent) < 500, len(sent)
+
+    def rows(frames):
+        return [
+            Counter(f.withColumn("attributes", F.to_json("attributes")).collect())
+            for f in frames
+        ]
+
+    clean, dlq = rows(first)
+    assert [clean, dlq] == rows(second)
+    assert (clean.total(), dlq.total()) == (3, 5)
+
+
+def test_fan_out_only_from_the_size_gate(spark, tmp_path):
+    """batch_kernel(fan_out=True) repartitions the raw records only when
+    the batch's planned input size reaches FAN_OUT_MIN_BYTES and it
+    arrives in fewer partitions than cores; fan_out=False never does."""
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.pipeline import (
+        FAN_OUT_MIN_BYTES,
+        batch_kernel,
+    )
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.sources.kinesis import (
+        read_kinesis_event_file,
+    )
+
+    def plan(records, fan_out):
+        parsed = batch_kernel(records, observe=False, fan_out=fan_out)
+        return parsed._jdf.queryExecution().executedPlan().toString()
+
+    def event_file(name, n_records):
+        path = tmp_path / name
+        path.write_text(json.dumps({"Records": [record] * n_records}) + "\n")
+        return path
+
+    record = {"kinesis": {"data": gzip_b64(make_payload(["x" * 200] * 5))},
+              "awsRegion": "r"}
+    tiny = read_kinesis_event_file(spark, str(event_file("tiny.jsonl", 1)))
+    assert "RoundRobinPartitioning" not in plan(tiny, True)
+
+    path = event_file("big.jsonl", FAN_OUT_MIN_BYTES // len(json.dumps(record)) + 10)
+    assert FAN_OUT_MIN_BYTES < path.stat().st_size < 2 * FAN_OUT_MIN_BYTES
+    big = read_kinesis_event_file(spark, str(path))
+    assert big.rdd.getNumPartitions() == 1
+    par = spark.sparkContext.defaultParallelism
+    fanned = plan(big, True)
+    if par > 1:
+        assert f"RoundRobinPartitioning({par})" in fanned, fanned
+    else:
+        assert "RoundRobinPartitioning" not in fanned
+    assert "RoundRobinPartitioning" not in plan(big, False)
