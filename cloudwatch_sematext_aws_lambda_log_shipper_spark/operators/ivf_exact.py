@@ -1,14 +1,11 @@
-"""Engine-exact (oracle-replayable) IVF and IVF-PQ ANN.
+"""Engine-exact (oracle-replayable) ANN — the repo's one ANN family:
+IVF-flat, IVF-PQ, hyperplane LSH, the IVF k-NN graph and SemDeDup, each
+one-shot and (IVF, IVF-PQ, LSH) as a persisted index.
 
-The numpy-kernel ANN paths in :mod:`.similarity` are the production
-defaults — Arrow-batched matmuls whose float-summation order differs
-from any SQL engine's, which is why their queries ride a rows-only
-correctness check with in-band recall audits. This module re-expresses
-the SAME index structures (coarse IVF partitions; product-quantization
-codebooks + asymmetric-distance scoring + exact refine — Jégou et al.,
-TPAMI 2011) under the repo's exact-arithmetic contract so a DuckDB
-oracle replays EVERY step bit-for-bit and the ANN queries sit under the
-strict hash gate:
+Every step runs under the repo's exact-arithmetic contract — coarse IVF
+partitions; product-quantization codebooks + asymmetric-distance scoring
++ exact refine (Jégou et al., TPAMI 2011) — so a DuckDB oracle replays
+it bit-for-bit and the ANN queries sit under the strict hash gate:
 
 - vectors normalize elementwise (x / greatest(sqrt(dot(e,e)), 1e-12))
   and every dot product is the sequential fold that matches DuckDB's
@@ -28,10 +25,15 @@ broadcast-as-literal centroids (no Python in the hot path — higher-
 order-function folds are interpreted but stay executor-side and
 shuffle-free); the per-iteration fit is one posexplode aggregation
 whose map-side combine shrinks the shuffle to n_clusters x dim partial
-sums, with the driver holding only the k x dim centroid matrix — the
-``fit_centroids_distributed`` shape with exact arithmetic. The search
-itself keeps the IVF contract: score only the probed clusters' members
-(a broadcast join on cluster id), rank, refine.
+sums, with the driver holding only the k x dim centroid matrix. The
+search itself keeps the IVF contract: score only the probed clusters'
+members (a broadcast join on cluster id), rank, refine.
+
+Persisted indexes (build once, probe many) carry a format sidecar that
+every query checks. The IVF-PQ index also grows under streaming
+appends: ``append_ivfpq_index_exact`` encodes a new batch with the
+frozen quantizer into its own ``ingest_batch=`` leaf, and
+``compact_ivfpq_index_exact`` folds the leafs back together.
 """
 
 from __future__ import annotations
@@ -474,7 +476,12 @@ def _query_probes_driver(
     all-NULL vector ties every dot and falls back to cluster order,
     matching NULLS-LAST + the _j tie-break). Returns the local probes
     frame (query_id, _qu, _cl) and the sorted distinct cluster list —
-    no probe job, no checkpoint, no distinct-collect job."""
+    no probe job, no checkpoint, no distinct-collect job.
+
+    Contract: at most ONE row per (query_id, _cl) — each query's probe
+    list is a slice of a permutation of the cluster ids.
+    ``_adc_shortlist`` relies on it (no dedup before the candidate
+    join), so a caller must not feed duplicate query ids."""
     import numpy as np
 
     C = np.asarray(centers, dtype=np.float64)
@@ -507,7 +514,11 @@ def _query_probes_exact(
     """(query_id, _qu, _cl): each query's nprobe nearest centroids —
     broadcast cross join against the centroid frame (one codegen'd dot
     per pair; see _assign_exact for why not one giant literal array),
-    (dot DESC, cluster) window rank over |queries| x k tiny rows."""
+    (dot DESC, cluster) window rank over |queries| x k tiny rows.
+
+    Contract: at most ONE row per (query_id, _cl) when query ids are
+    unique — the rank runs over distinct centroid ids. ``_adc_shortlist``
+    and the SemDeDup multi-assignment rely on it (no dedup exchange)."""
     spark = qn.sparkSession
     cdf = F.broadcast(_centers_df(spark, centers))
     wq = Window.partitionBy("query_id").orderBy(F.col("_dot").desc(), "_j")
@@ -550,9 +561,8 @@ def ann_topk_ivf_exact(
     """IVF-flat ANN under the exact-arithmetic contract: fit (or take)
     replayable centroids, assign the corpus and probe the queries with
     the same argmax-of-fold-dots, score exact cosine (normalized-vector
-    dot) inside the probed clusters only, rank (cos DESC, id). Same
-    output shape as similarity.ann_topk_ivf; still genuinely
-    approximate (nprobe < n_clusters), but every emitted double is
+    dot) inside the probed clusters only, rank (cos DESC, id). Output
+    (query_id, neighbor_id, cosine, rnk); still genuinely approximate (nprobe < n_clusters), but every emitted double is
     SQL-reproducible.
 
     ``est_scored_rows``: the caller's estimate of rows the scoring
@@ -596,7 +606,52 @@ def ann_topk_ivf_exact(
     return _rank_topk(scored, k)
 
 
-# --- persisted IVF index (exact-arith twin of build/query_ivf_index) ----
+# --- persisted-index format sidecar --------------------------------------
+#
+# Every persisted index root holds a one-line ``_FORMAT`` file naming the
+# index kind and its on-disk layout version. Queries refuse an index
+# whose sidecar is missing or names another layout — a clear "rebuild"
+# error instead of a deep AnalysisException on a column the old layout
+# lacks — and cache layers treat the same mismatch as "rebuild". Bump a
+# kind's version whenever its layout changes. The sidecar is written
+# LAST, so an interrupted build never looks current.
+
+_INDEX_FORMAT_FILE = "_FORMAT"
+_INDEX_LAYOUTS = {"ivf": 1, "ivfpq": 1, "lsh": 1}
+
+
+def _index_format(kind: str) -> str:
+    return f"{kind} v{_INDEX_LAYOUTS[kind]}"
+
+
+def _write_index_format(path: str, kind: str) -> None:
+    with open(os.path.join(path, _INDEX_FORMAT_FILE), "w") as fh:
+        fh.write(_index_format(kind) + "\n")
+
+
+def index_format_current(path: str, kind: str | None = None) -> bool:
+    """True when ``path`` holds a current-layout index (of ``kind``
+    when given, else of whichever kind its sidecar names)."""
+    try:
+        with open(os.path.join(path, _INDEX_FORMAT_FILE)) as fh:
+            got = fh.read().strip()
+    except OSError:
+        return False
+    name = got.split(" ", 1)[0]
+    if kind is not None and name != kind:
+        return False
+    return name in _INDEX_LAYOUTS and got == _index_format(name)
+
+
+def _require_index_format(path: str, kind: str) -> None:
+    if not index_format_current(path, kind):
+        raise ValueError(
+            f"no current {kind} index at {path} (format sidecar missing "
+            f"or old): rebuild the index (layout v{_INDEX_LAYOUTS[kind]})"
+        )
+
+
+# --- persisted IVF index -------------------------------------------------
 
 
 def build_ivf_index_exact(
@@ -635,6 +690,7 @@ def build_ivf_index_exact(
         .partitionBy("cluster")
         .parquet(os.path.join(path, "assigned"))
     )
+    _write_index_format(path, "ivf")
 
 
 def query_ivf_index_exact(
@@ -661,6 +717,7 @@ def query_ivf_index_exact(
     # (bit-identical fold arithmetic), and the estimate is pure
     # arithmetic over footer rows — the pre-scan driver work drops
     # from 4 scheduled jobs to 1.
+    _require_index_format(path, "ivf")
     centers = [
         list(r["centroid"])
         for r in sorted(
@@ -1081,9 +1138,13 @@ def build_ivfpq_index_exact(
     dim: int = 64,
 ) -> None:
     """Persist the exact-arith IVF-PQ artifacts: centroids, codebooks,
-    and the (neighbor_id, _j, _t) code table partitioned by cluster —
-    plus the normalized vectors for the refine fetch, so the index is
-    self-contained."""
+    the array-layout code table partitioned by cluster, and the
+    normalized vectors for the refine fetch (so the index is
+    self-contained). The corpus lands as the ``ingest_batch=0`` leaf of
+    both tables — the same leaf layout every later append writes (see
+    append_ivfpq_index_exact), so an index has one layout whether it
+    was built once or grown by a stream. The build is a full
+    overwrite."""
     spark = corpus.sparkSession
     centers = fit_centroids_exact(
         corpus, n_clusters, iters, id_col, vec_col, "ivf", dim
@@ -1110,17 +1171,118 @@ def build_ivfpq_index_exact(
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "codebooks")
     )
-    # array layout (opt r16): one row per vector, codes as array<int> —
-    # see encode_codes_arrays; the exchange-free ADC fold reads this
+    _write_ivfpq_leaf(cn, centers, books, m, dim, path, 0, "static")
+    _write_index_format(path, "ivfpq")
+
+
+def _write_ivfpq_leaf(
+    cn: DataFrame, centers, books, m: int, dim: int, path: str,
+    batch_id: int, overwrite: str,
+) -> None:
+    """Encode the normalized frame ``cn`` (neighbor_id, _u) with the
+    given quantizer and land it as the ``ingest_batch=<batch_id>`` leaf
+    of the code table (sub-partitioned by cluster, array layout — see
+    encode_codes_arrays; the exchange-free ADC fold reads it) and of
+    the vector table. ``overwrite`` is Spark's partitionOverwriteMode:
+    "static" replaces the whole table (build), "dynamic" only the
+    leafs this batch writes (append — a retry replaces its own leafs)."""
+    leaf = F.lit(int(batch_id))
     codes = encode_codes_arrays(cn, centers, books, m=m, dim=dim)
     (
         codes.withColumnRenamed("_cl", "cluster")
+        .withColumn("ingest_batch", leaf)
         .repartition("cluster")
         .write.mode("overwrite")
-        .partitionBy("cluster")
+        .option("partitionOverwriteMode", overwrite)
+        .partitionBy("ingest_batch", "cluster")
         .parquet(os.path.join(path, "codes"))
     )
-    cn.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
+    (
+        cn.withColumn("ingest_batch", leaf)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", overwrite)
+        .partitionBy("ingest_batch")
+        .parquet(os.path.join(path, "vectors"))
+    )
+
+
+def _load_ivfpq_artifacts(spark: SparkSession, path: str):
+    """(centers, books) from a persisted IVF-PQ index's sidecars —
+    centers ordered by cluster, books as sorted (j, t, vector)."""
+    centers = [
+        list(r["centroid"])
+        for r in sorted(
+            _read_artifact_rows(spark, os.path.join(path, "centroids")),
+            key=lambda r: r["cluster"],
+        )
+    ]
+    books = [
+        (int(r["_j"]), int(r["_t"]), list(r["_cb"]))
+        for r in sorted(
+            _read_artifact_rows(spark, os.path.join(path, "codebooks")),
+            key=lambda r: (r["_j"], r["_t"]),
+        )
+    ]
+    return centers, books
+
+
+def append_ivfpq_index_exact(
+    corpus: DataFrame,
+    path: str,
+    batch_id: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Grow a persisted IVF-PQ index by one batch with the quantizer
+    FROZEN (the FAISS add-with-fixed-quantizer contract): the new
+    vectors are assigned to the index's own centroids, encoded with its
+    own codebooks, and land as the ``ingest_batch=<batch_id>`` leaf of
+    the code and vector tables. The codes are exactly those a build
+    over the union with the same fitted quantizer would hold, so a
+    query over the grown index equals the one-shot search with those
+    artifacts (pinned in tests/test_ivf_exact.py). ``dim`` and ``m``
+    come from the persisted sidecars.
+
+    Exactly-once under retry: the write is a DYNAMIC partition
+    overwrite, so re-delivering (batch_id, vectors) replaces its own
+    leafs instead of duplicating rows — the batch-id-keyed idempotence
+    of the streaming stores (streaming/neardup.py). Leaf 0 is the
+    build's; small-file growth is folded by compact_ivfpq_index_exact."""
+    if batch_id <= 0:
+        raise ValueError("append batch_id must be >= 1 (0 is the build leaf)")
+    _require_index_format(path, "ivfpq")
+    centers, books = _load_ivfpq_artifacts(corpus.sparkSession, path)
+    dim = len(centers[0])
+    m = 1 + max(j for j, _t, _v in books)
+    cn = _unit(corpus, id_col, vec_col, "neighbor_id", dim,
+               materialize=True)
+    _write_ivfpq_leaf(cn, centers, books, m, dim, path, batch_id, "dynamic")
+
+
+def compact_ivfpq_index_exact(
+    spark: SparkSession,
+    path: str,
+    up_to_batch: int | None = None,
+    target_files: int = 1,
+) -> dict[str, int]:
+    """Fold the committed ``ingest_batch=`` leafs of the code and
+    vector tables into one fresh negative-id leaf each — the
+    crash-recoverable rename-commit fold of the streaming stores
+    (streaming/neardup._fold_store). The code table keeps its
+    ``cluster=`` sub-partitioning, so the probe PartitionFilter
+    survives the fold. ``up_to_batch`` bounds folding while an ingest
+    is in flight. Returns {table path: pre-fold file count} for the
+    tables that folded."""
+    from ..streaming.neardup import _fold_store
+
+    out: dict[str, int] = {}
+    for table, sub in (("codes", ["cluster"]), ("vectors", None)):
+        tpath = os.path.join(path, table)
+        n = _fold_store(spark, tpath, up_to_batch, target_files,
+                        partition_by=sub)
+        if n:
+            out[tpath] = n
+    return out
 
 
 def query_ivfpq_index_exact(
@@ -1138,30 +1300,18 @@ def query_ivfpq_index_exact(
 ) -> DataFrame:
     """Search the persisted exact-arith IVF-PQ index: probed cluster
     ids partition-prune the code-table scan; ADC + refine run exactly
-    like the one-shot path (bit-equal results by construction).
-    ``est_scored_rows`` is retired (opt r16 — the LUT-fold ADC has no
-    per-candidate dot for the cost rule to steer; kept for API
-    stability)."""
+    like the one-shot path (bit-equal results by construction), over
+    every ingest leaf. ``est_scored_rows`` is retired (opt r16 — the
+    LUT-fold ADC has no per-candidate dot for the cost rule to steer;
+    kept for API stability)."""
     del est_scored_rows
     # opt r15 (guide §1.2/§5, the LSH persisted-path pattern): both
     # fit artifacts read driver-side (no job on local paths), probe
     # assignment replayed driver-side from ONE query collect
     # (bit-identical fold arithmetic) — pre-scan driver work drops
     # from 5 scheduled jobs to 1.
-    centers = [
-        list(r["centroid"])
-        for r in sorted(
-            _read_artifact_rows(spark, os.path.join(path, "centroids")),
-            key=lambda r: r["cluster"],
-        )
-    ]
-    books = [
-        (int(r["_j"]), int(r["_t"]), list(r["_cb"]))
-        for r in sorted(
-            _read_artifact_rows(spark, os.path.join(path, "codebooks")),
-            key=lambda r: (r["_j"], r["_t"]),
-        )
-    ]
+    _require_index_format(path, "ivfpq")
+    centers, books = _load_ivfpq_artifacts(spark, path)
     qpdf, qid_type = _collect_unit_queries(queries, id_col, vec_col, dim)
     probes, needed = _query_probes_driver(
         spark, qpdf, centers, nprobe, qid_type
@@ -1169,9 +1319,11 @@ def query_ivfpq_index_exact(
     codes = (
         spark.read.parquet(os.path.join(path, "codes"))
         .filter(F.col("cluster").isin(needed))
-        .withColumnRenamed("cluster", "_cl")
+        .select("neighbor_id", "_ts", F.col("cluster").alias("_cl"))
     )
-    cn = spark.read.parquet(os.path.join(path, "vectors"))
+    cn = spark.read.parquet(os.path.join(path, "vectors")).select(
+        "neighbor_id", "_u"
+    )
     return _ivfpq_search_persisted(
         spark, cn, codes, probes, books, k, refine_factor, m, dim,
     )
@@ -1216,9 +1368,8 @@ def _ivfpq_search_persisted(
 # join-fused vs 7.4s filter-fused per ~1.5M pairs), and staging via
 # localCheckpoint pays a corpus*nprobe*1KB materialization instead.
 # For the two pair-heavy operators (k-NN graph, SemDeDup) the exact
-# contract is therefore executed as a numpy PER-DIM FOLD inside the
-# same cogroup-by-cluster plan the production BLAS operator
-# (similarity.ann_knn_graph_ivf) uses:
+# contract is therefore executed as a numpy PER-DIM FOLD inside a
+# cogroup-by-cluster plan:
 #
 #     acc = 0; for d in range(dim): acc += Q[:, d] * C[:, d]
 #
@@ -1497,8 +1648,7 @@ def ann_knn_graph_ivf_exact(
     double SQL-reproducible: one assignment pass, per-vector nprobe
     probes, candidates scored inside a cogroup on the cluster key
     (both sides shuffle on cluster id — the correct shape when the
-    query set IS the corpus, and the SAME plan as the production BLAS
-    operator similarity.ann_knn_graph_ivf), self-pairs excluded BY ID,
+    query set IS the corpus), self-pairs excluded BY ID,
     exact per-dim-fold cosine, (cos DESC, id) rank. Still approximate
     (cross-cluster neighbors beyond the probes are missed) — recall
     rides along via with_recall_at_k at the query layer, hash-checked.
@@ -1982,6 +2132,7 @@ def build_lsh_index_exact(
         .partitionBy("_b")
         .parquet(os.path.join(path, "bucketed"))
     )
+    _write_index_format(path, "lsh")
 
 
 def query_lsh_index_exact(
@@ -2007,6 +2158,7 @@ def query_lsh_index_exact(
     like the one-shot path."""
     import numpy as np
 
+    _require_index_format(path, "lsh")
     planes = lsh_plane_weights_exact(num_planes, dim)
     qpdf = (
         _unit(queries, id_col, vec_col, "query_id", dim)

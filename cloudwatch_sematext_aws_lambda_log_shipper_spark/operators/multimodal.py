@@ -171,26 +171,6 @@ def _resize_ppm_one(data: bytes, out_w: int, out_h: int) -> bytes | None:
     return header + out.tobytes()
 
 
-def _resize_jpeg_one(data: bytes, out_w: int, out_h: int) -> bytes | None:
-    """Decode one baseline JPEG (vendored public-spec codec), nearest-
-    neighbor resize, and emit raw P6 — the decoded-pixel format every
-    downstream pixel consumer here (dHash, frame sampling, PPM resize)
-    reads. None for undecodable/non-baseline streams."""
-    import numpy as np
-
-    from .jpeg_baseline import decode_baseline_jpeg
-
-    try:
-        px = decode_baseline_jpeg(data)
-    except (ValueError, NotImplementedError):
-        return None
-    h, w = px.shape[:2]
-    ri = (np.arange(out_h) * h) // out_h
-    ci = (np.arange(out_w) * w) // out_w
-    out = px[ri][:, ci]
-    return b"P6\n%d %d\n255\n" % (out_w, out_h) + out.tobytes()
-
-
 def resize_images(
     df: DataFrame,
     width: int = 224,
@@ -307,8 +287,7 @@ def sample_frames(
     frame emitted as its standalone baseline-JPEG bytes) and for the
     raw concatenated-PPM format (header walk). Every every_n-th frame
     is kept, one output row per kept frame; tracks needing an absent
-    codec (h264, vp9) yield no rows here — see sample_frames_stub for
-    the marked placeholder.
+    codec (h264, vp9) yield no rows here.
 
     Scale: narrow mapInPandas; output fan-out is bounded by
     frames/every_n per row."""
@@ -329,22 +308,6 @@ def sample_frames(
             )
 
     return df.select(id_col, media_col).mapInPandas(fn, FRAME_SCHEMA)
-
-
-def sample_frames_stub(df: DataFrame, media_col: str = "media",
-                       every_n: int = 30) -> DataFrame:
-    """Placeholder for inter-frame-CODED video tracks (h264/hevc in
-    mp4, vp9 in webm): needs a real video codec, absent here.
-    Intra-coded containers are real: RIFF/AVI Motion-JPEG and
-    ISO-BMFF/MP4 Motion-JPEG (vendored public-spec container walks +
-    T.81 frame decode) and raw concatenated-PPM, all in
-    sample_frames."""
-    raise NotImplementedError(
-        "frame sampling of inter-frame-coded tracks (h264/hevc, vp9) "
-        "needs a video codec — not available in this container; "
-        "AVI/MJPEG, MP4/MJPEG and raw-PPM sampling are implemented "
-        "in sample_frames"
-    )
 
 
 def _codec_rgb(data: bytes):

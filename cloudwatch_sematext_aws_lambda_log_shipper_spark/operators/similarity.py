@@ -1,20 +1,20 @@
-"""Embedding similarity search: exact cosine top-k (broadcast baseline)
-and random-hyperplane LSH bucketed ANN (the scale path).
+"""Embedding similarity primitives and the exact operators built on
+them: the dot/cosine expression builders (the sequential-fold dot
+contract that the ANN family in :mod:`.ivf_exact` relies on), exact
+cosine top-k, exact threshold pairs, recall@k audits, int8 quantized
+search, the blocked-GEMM k-NN graph and hard negatives, and k-center /
+MMR diversity sampling. Approximate search (IVF, IVF-PQ, LSH, the IVF
+k-NN graph, SemDeDup) lives in :mod:`.ivf_exact`.
 
-The exact path broadcasts the (small) query set and scans the corpus
+The exact top-k broadcasts the (small) query set and scans the corpus
 once — at 100 TB that is a single narrow pass, the right brute-force
-shape. The ANN path buckets vectors by hyperplane sign bits so the
-candidate join shuffles on bucket ids instead of crossing all pairs.
-
-All math is double-precision JVM expressions (zip_with + aggregate);
-no Python in the scoring loop.
+shape.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 
 def as_double(vec: Column) -> Column:
@@ -196,26 +196,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-@F.pandas_udf(DoubleType())
-def cosine_batch(a, b):
-    """Arrow-batched cosine for the APPROXIMATE paths: one numpy matmul
-    per batch instead of ~3*dim interpreted lambda steps per row (Spark
-    never codegens higher-order functions, so `cosine` above evaluates
-    interpreted — fine for oracle-parity exact paths, ~10x too slow for
-    candidate scoring). FP summation order differs from `cosine`, which
-    is why the exact/oracle-checked paths don't use it."""
-    import numpy as np
-    import pandas as pd
-
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    am = np.stack(a.to_numpy())
-    bm = np.stack(b.to_numpy())
-    num = np.einsum("ij,ij->i", am, bm)
-    den = np.linalg.norm(am, axis=1) * np.linalg.norm(bm, axis=1)
-    return pd.Series(num / den)
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -230,7 +210,8 @@ def cosine_topk(
 
     Scale: BroadcastNestedLoopJoin with a tiny query side is a single
     corpus scan; the window partitions by query id over |corpus| x |q|
-    scored rows. For large |q|, switch to the LSH path below.
+    scored rows. For large |q|, switch to the ANN family in
+    :mod:`.ivf_exact`.
 
     ``dim`` (when the vector length is statically known) swaps the
     interpreted HOF cosine for the unrolled codegen'd expression —
@@ -476,371 +457,6 @@ def with_recall_at_k(
     return out.select(*cols)
 
 
-# --- IVF (inverted-file) ANN --------------------------------------------
-
-
-def _fit_sample(c: DataFrame, fit_sample_limit: int):
-    """ONE deterministic, bounded sample collection shared by every
-    driver-side fit over the same corpus frame (coarse centroids, PQ
-    codebooks): the sample is ordered by an id hash before the limit
-    (a bare limit() depends on incidental scan/partition order, so two
-    fits over a repartitioned/cached copy of the same corpus could see
-    different samples and produce different results). The hash order
-    also makes the sample pseudo-random rather than
-    lowest-ids-first-biased; the sort is a TakeOrderedAndProject bounded
-    by the sample size, not a full-corpus sort.
-
-    toPandas rides the session's Arrow serializer (columnar batches);
-    row-based collect() pickles each array row individually — ~5x
-    slower for a 25k x 64 sample. Callers that need BOTH fits (IVF-PQ)
-    pass this array to each, collapsing two corpus scans into one —
-    identical results by construction since both fits drew the exact
-    same sample anyway."""
-    import numpy as np
-
-    sample = (
-        c.orderBy(F.xxhash64("neighbor_id"))
-        .select("c_vec")
-        .limit(fit_sample_limit)
-        .toPandas()["c_vec"]
-    )
-    return np.stack([np.asarray(v, dtype=np.float64) for v in sample])
-
-
-def _fit_centroids(c: DataFrame, n_clusters: int, seed: int,
-                   fit_sample_limit: int, sample_x=None):
-    """Driver-side spherical Lloyd on a BOUNDED sample (see
-    :func:`_fit_sample` for the sampling discipline; pass ``sample_x``
-    to reuse an already-collected sample). 25k points is ample for
-    n_clusters in the tens; centroid quality saturates long before
-    that. (Distributed KMeans schedules one full Spark job per Lloyd
-    iteration — pure scheduling overhead for roughly-converged
-    centroids; measured 8x slower end-to-end.)"""
-    import numpy as np
-
-    X = _fit_sample(c, fit_sample_limit) if sample_x is None else sample_x
-    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.RandomState(seed)
-    centers = Xn[rng.choice(len(Xn), size=min(n_clusters, len(Xn)), replace=False)]
-    for _ in range(8):
-        assign = (Xn @ centers.T).argmax(axis=1)
-        for j in range(len(centers)):
-            members = Xn[assign == j]
-            if len(members):
-                m = members.mean(axis=0)
-                centers[j] = m / max(np.linalg.norm(m), 1e-12)
-    return centers
-
-
-def ann_topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    nprobe: int = 6,
-    seed: int = 42,
-    fit_sample_limit: int = 25_000,
-    centers=None,
-) -> DataFrame:
-    """IVF-flat ANN: KMeans-partition the corpus (cosine distance), probe
-    each query's nprobe nearest centroids, rank exact cosine within the
-    probed partitions only.
-
-    Scale: the centroid fit runs DRIVER-SIDE on a BOUNDED sample
-    (fit_sample_limit rows collected once — spherical Lloyd over a
-    100k x dim numpy array is milliseconds). Distributed KMeans
-    (pyspark.ml) schedules one full Spark job per Lloyd iteration plus
-    ml-vector conversion passes; for centroids that only need to be
-    roughly converged that is pure scheduling overhead — measured 8x
-    slower end-to-end on this query. Centroids (n_clusters x dim,
-    a few KB) broadcast to every task; the full corpus gets ONE narrow
-    Arrow-batched assignment pass (argmax matmul per batch). Search
-    scans ~nprobe/n_clusters of the corpus and shuffles on cluster id
-    only. Unlike hyperplane LSH, the partitions ADAPT to the data
-    distribution, which is what keeps recall usable even on
-    near-uniform embeddings.
-    """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("c_vec")
-    )
-    if centers is None:
-        centers = _fit_centroids(c, n_clusters, seed, fit_sample_limit)
-    # one Arrow-batched assignment pass over the full corpus
-    assigned = c.withColumn("cluster", _assign_factory(centers)(F.col("c_vec")))
-    probes = _query_probes(queries, centers, nprobe, id_col, vec_col)
-    return _ivf_search(assigned, probes, k)
-
-
-def _assign_factory(ctr):
-    """Arrow-batched nearest-centroid assignment (argmax matmul)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType
-
-    @F.pandas_udf(IntegerType())
-    def assign_cluster(v):
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        m = np.stack(v.to_numpy())
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series((m @ ctr.T).argmax(axis=1).astype("int32"))
-
-    return assign_cluster
-
-
-def _probe_factory(ctr, n_probe):
-    """Arrow-batched nprobe-nearest-centroid list per query vector."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def probe_clusters(v):
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        m = np.stack(v.to_numpy())
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = m @ ctr.T
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(top.astype("int32")))
-
-    return probe_clusters
-
-
-def _query_probes(
-    queries: DataFrame, centers, nprobe: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """(query_id, q_vec, cluster) — one row per probed cluster per query."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("q_vec")
-    )
-    return q.withColumn(
-        "cluster",
-        F.explode(_probe_factory(centers, min(nprobe, len(centers)))(F.col("q_vec"))),
-    ).select("query_id", "q_vec", "cluster")
-
-
-def _ivf_search(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
-    """Rank over an assigned (neighbor_id, c_vec, cluster) corpus:
-    broadcast the exploded query probes, score exact cosine inside the
-    probed clusters only, window-rank per query."""
-    scored = assigned.join(F.broadcast(probes), "cluster").withColumn(
-        "cos", cosine_batch(F.col("q_vec"), F.col("c_vec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rnk")
-    )
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    seed: int = 42,
-    fit_sample_limit: int = 25_000,
-    centers=None,
-) -> None:
-    """Persist an IVF index: centroids (tiny parquet) + the corpus
-    assigned to clusters, written PARTITIONED BY cluster — build once,
-    probe many. At query time only the probed clusters' directories are
-    scanned (real partition pruning, see query_ivf_index), so each query
-    batch reads ~nprobe/n_clusters of the corpus bytes instead of
-    re-fitting and re-scanning everything the way the one-shot
-    ann_topk_ivf does.
-
-    Scale: the fit is the same bounded driver-side Lloyd; the
-    assignment pass is one narrow Arrow-batched job; the write shuffles
-    once on cluster id. Rebuild cadence is a policy choice (centroids
-    drift slowly; nightly is typical)."""
-    import os
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("c_vec")
-    )
-    if centers is None:
-        centers = _fit_centroids(c, n_clusters, seed, fit_sample_limit)
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(centers)],
-        "cluster int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    (
-        c.withColumn("cluster", _assign_factory(centers)(F.col("c_vec")))
-        .repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(os.path.join(path, "assigned"))
-    )
-
-
-def query_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k search against a persisted IVF index (build_ivf_index).
-
-    The distinct probed cluster ids (bounded by n_clusters — a tiny,
-    driver-safe collect) become a literal IN-filter on the partition
-    column, so the parquet scan PRUNES unprobed cluster directories:
-    the plan's FileScan shows PartitionFilters and reads only
-    ~nprobe/n_clusters of the index bytes."""
-    import os
-
-    import numpy as np
-
-    cent = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("cluster")
-        .collect()
-    )
-    centers = np.array([r["centroid"] for r in cent], dtype=np.float64)
-    assigned = spark.read.parquet(os.path.join(path, "assigned"))
-
-    # ONE probe job: the tiny exploded-probe frame is materialized
-    # eagerly (localCheckpoint), the distinct cluster ids come off it
-    # driver-side, and the search reuses the same frame — the pandas-UDF
-    # probe scoring runs once per call, not twice.
-    probes = _query_probes(queries, centers, nprobe, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
-    needed = sorted(
-        r["cluster"] for r in probes.select("cluster").distinct().collect()
-    )
-    pruned = assigned.filter(F.col("cluster").isin(needed))
-    return _ivf_search(pruned, probes, k)
-
-
-# --- random-hyperplane LSH ----------------------------------------------
-
-
-_PLANE_WEIGHTS_CACHE: dict = {}
-
-
-def _plane_weights(spark, num_planes: int, dim: int):
-    """Deterministic pseudo-random weights in [-1, 1] for each
-    (plane, dim), derived from JVM xxhash64 over the (plane*100003+dim)
-    seed — no stored model, reproducible on any cluster.
-
-    Evaluated in ONE tiny Spark job and memoized. (The previous
-    formulation built num_planes*dim literal Column expressions — each
-    Column op is a Py4J round-trip, so a 4x64 plane set cost ~1300
-    driver round-trips, 5+ seconds of pure plan construction before a
-    single row moved.)"""
-    import numpy as np
-
-    key = (num_planes, dim)
-    if key not in _PLANE_WEIGHTS_CACHE:
-        rows = (
-            spark.range(num_planes * dim)
-            .select(
-                # the seed literal must hash as int32 to reproduce the
-                # historical xxhash64(lit(plane*100003 + dim)) values
-                (
-                    F.pmod(
-                        F.xxhash64(
-                            (
-                                (F.col("id") / dim).cast("int") * 100003
-                                + F.pmod(F.col("id"), F.lit(dim)).cast("int")
-                            ).cast("int")
-                        ),
-                        F.lit(10000001),
-                    ).cast("double")
-                    / 5000000.0
-                    - 1.0
-                ).alias("w")
-            )
-            .collect()
-        )
-        _PLANE_WEIGHTS_CACHE[key] = np.array(
-            [r["w"] for r in rows], dtype=np.float64
-        ).reshape(num_planes, dim)
-    return _PLANE_WEIGHTS_CACHE[key]
-
-
-def hyperplane_bucket_udf(weights):
-    """Sign-bit bucket id, vectorized: bit p = (vec . plane_p) > 0 —
-    one (batch x dim) @ (dim x planes) matmul per Arrow batch."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import IntegerType
-
-    powers = (1 << np.arange(weights.shape[0])).astype(np.int64)
-
-    @F.pandas_udf(IntegerType())
-    def bucket(v):
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        m = np.stack(v.to_numpy())
-        bits = (m @ weights.T) > 0
-        return pd.Series((bits @ powers).astype("int32"))
-
-    return bucket
-
-
-def ann_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 6,
-    dim: int = 64,
-    multiprobe: bool = True,
-) -> DataFrame:
-    """Approximate top-k: hyperplane-bucket the corpus, probe each
-    query's bucket (+ all Hamming-1 neighbor buckets when multiprobe),
-    rank exact cosine within candidates only.
-
-    Scale: corpus bucketing is one narrow pass; the candidate join
-    shuffles on bucket id (corpus side ~|corpus|/2^planes rows per
-    bucket). Probing 1+planes buckets bounds candidates; no cross join
-    anywhere.
-    """
-    bucket = hyperplane_bucket_udf(
-        _plane_weights(corpus.sparkSession, num_planes, dim)
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("c_vec")
-    ).withColumn("bucket", bucket(F.col("c_vec")))
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("q_vec")
-    ).withColumn("q_bucket", bucket(F.col("q_vec")))
-    probes = [F.col("q_bucket")]
-    if multiprobe:
-        probes += [
-            F.col("q_bucket").bitwiseXOR(F.lit(1 << p)) for p in range(num_planes)
-        ]
-    q = q.withColumn("bucket", F.explode(F.array(*probes)))
-
-    scored = c.join(F.broadcast(q), "bucket").withColumn(
-        "cos", cosine_batch(F.col("q_vec"), F.col("c_vec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rnk")
-    )
-
-
 # --- int8 embedding quantization ----------------------------------------
 
 
@@ -923,186 +539,7 @@ def quantized_topk(
     )
 
 
-# --- distributed centroid fit + semantic dedup --------------------------
-
-
-def fit_centroids_distributed(
-    corpus: DataFrame,
-    n_clusters: int = 16,
-    iters: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Spherical Lloyd over the WHOLE corpus as Spark jobs — the fit
-    path for regimes where the bounded driver sample stops being
-    representative: real IVF deployments size n_clusters ~ sqrt(N)
-    (thousands-plus at 100 TB), and a 25k sample cannot estimate
-    thousands of centroids. For the tens-of-clusters regime the
-    driver-side _fit_centroids stays the default — one job per Lloyd
-    iteration is pure scheduling overhead there (measured 8x slower
-    end-to-end on the bench query).
-
-    Per iteration: ONE narrow Arrow-batched assignment pass (broadcast
-    centroids, argmax matmul) + ONE aggregation whose map-side partial
-    combine shrinks the shuffle to n_clusters x dim partial sums per
-    partition; the driver holds only the (n_clusters x dim) centroid
-    matrix. Init is deterministic (hash-ordered first k vectors), so
-    the fit is reproducible for a given corpus regardless of layout
-    (up to float-sum ordering inside the mean, which moves centroids
-    by ulps, not assignments).
-
-    Returns a numpy (n_clusters, dim) unit-norm array — drop it into
-    ann_topk_ivf/build_ivf_index via their ``centers`` parameter.
-    """
-    import numpy as np
-
-    c = corpus.select(
-        F.col(id_col).alias("_id"), as_double(F.col(vec_col)).alias("_v")
-    )
-    # norm lands in a plain column BEFORE the transform: an outer
-    # aggregate expression inside a HOF lambda re-evaluates per element
-    # (no CSE in interpreted lambdas) — O(dim^2) per row.
-    cn = (
-        c.select(
-            "_id",
-            "_v",
-            F.greatest(l2_norm(F.col("_v")), F.lit(1e-12)).alias("_n"),
-        )
-        .select(
-            "_id", F.transform("_v", lambda x: x / F.col("_n")).alias("_vn")
-        )
-        .localCheckpoint(eager=False)  # normalize once, reuse every iteration (lazy r15: seed collect materializes)
-    )
-
-    seed_rows = (
-        cn.orderBy(F.xxhash64("_id")).limit(n_clusters).select("_vn").toPandas()
-    )
-    centers = np.stack([np.asarray(v, dtype=np.float64) for v in seed_rows["_vn"]])
-    try:
-        for _ in range(iters):
-            assigned = cn.withColumn(
-                "_cl", _assign_factory(centers)(F.col("_vn"))
-            )
-            sums = (
-                assigned.select("_cl", F.posexplode("_vn").alias("_d", "_x"))
-                .groupBy("_cl", "_d")
-                .agg(F.sum("_x").alias("_s"))
-                .toPandas()  # bounded: n_clusters x dim rows
-            )
-            new = centers.copy()  # empty clusters keep their old center
-            for cl, grp in sums.groupby("_cl"):
-                vec = grp.sort_values("_d")["_s"].to_numpy()
-                new[int(cl)] = vec / max(np.linalg.norm(vec), 1e-12)
-            centers = new
-    finally:
-        cn.unpersist()
-    return centers
-
-
-def semdedup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.97,
-    n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    fit_sample_limit: int = 25_000,
-    centers=None,
-    n_assign: int = 2,
-) -> DataFrame:
-    """SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023):
-    KMeans-partition the embedding space, then compare pairs ONLY
-    within a cluster — candidates come from a bucketed equi-join on
-    cluster id, never an all-pairs cross join. Verification is exact
-    cosine on the candidates.
-
-    ``n_assign`` > 1 is MULTI-ASSIGNMENT: each vector is indexed under
-    its n_assign nearest centroids, so a pair is compared when the two
-    share ANY of them — the standard recall fix for pairs that straddle
-    a cluster boundary (measured on the test corpus at k=8: recall 0.50
-    single-assigned, 0.86 at n_assign=2, 1.0 at 3). Candidate work
-    scales ~n_assign^2/k, storage ~n_assign.
-
-    Returns (id_a, id_b, cosine) with id_a < id_b, distinct. Pairs
-    whose vectors share no assigned cluster are missed — that is the
-    SemDeDup trade (recall vs the quadratic scan); measure against
-    cosine_pairs_exact on a sample, and raise n_assign / lower
-    n_clusters to taste.
-
-    Scale: fit is the bounded driver Lloyd (or pass ``centers`` from
-    fit_centroids_distributed); assignment is one narrow Arrow pass;
-    ONE shuffle on cluster id moves each vector n_assign times, then
-    each cluster scores itself with a blocked GEMM (pathological
-    cluster skew is the n_clusters knob's job). Pairs shared by both
-    assigned clusters score twice and dedup after thresholding.
-    """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("c_vec")
-    )
-    if centers is None:
-        centers = _fit_centroids(c, n_clusters, seed, fit_sample_limit)
-    m = min(max(int(n_assign), 1), len(centers))
-    assigned = c.select(
-        F.col("neighbor_id").alias("_id"),
-        F.col("c_vec").alias("_v"),
-        F.explode(_probe_factory(centers, m)(F.col("c_vec"))).alias("cluster"),
-    )
-
-    # Score each cluster with ONE chunked GEMM inside applyInPandas
-    # instead of materializing the ~sum(n_c^2)/2 candidate pair rows
-    # (each dragging TWO dim-sized vectors through a shuffle + Arrow) —
-    # measured ~4x on the bench query. The shuffle moves each vector
-    # n_assign times, never per-pair. A cluster must fit in one
-    # executor's memory (n_c x dim doubles) — the regime SemDeDup runs
-    # in anyway (n_clusters ~ sqrt(N) keeps n_c ~ sqrt(N)); the GEMM
-    # itself is blocked so the score matrix stays 2048^2 regardless.
-    thr = float(threshold)
-
-    def _score(pdf):
-        import numpy as np
-        import pandas as pd
-
-        n = len(pdf)
-        empty = pd.DataFrame(
-            {"id_a": pd.Series(dtype="int64"),
-             "id_b": pd.Series(dtype="int64"),
-             "_cos": pd.Series(dtype="float64")}
-        )
-        if n < 2:
-            return empty
-        pdf = pdf.sort_values("_id")  # position order == id order
-        ids = pdf["_id"].to_numpy()
-        V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(V, axis=1)  # unclamped, like cosine_batch
-        out = [empty]
-        B = 2048
-        for i0 in range(0, n, B):
-            vi, ni = V[i0 : i0 + B], norms[i0 : i0 + B]
-            for j0 in range(i0, n, B):
-                vj, nj = V[j0 : j0 + B], norms[j0 : j0 + B]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    M = (vi @ vj.T) / np.outer(ni, nj)
-                ii, jj = np.nonzero(M >= thr)  # NaN never passes
-                jj_abs = jj + j0
-                keep = ii + i0 < jj_abs  # strict upper triangle
-                ii, jj_abs = ii[keep], jj_abs[keep]
-                if len(ii):
-                    out.append(
-                        pd.DataFrame(
-                            {"id_a": ids[ii + i0], "id_b": ids[jj_abs],
-                             "_cos": M[ii, jj_abs - j0]}
-                        )
-                    )
-        return pd.concat(out, ignore_index=True)
-
-    pairs = assigned.groupBy("cluster").applyInPandas(
-        _score, "id_a long, id_b long, _cos double"
-    )
-    # a pair sharing BOTH assigned clusters scores twice — dedup the
-    # (tiny, already-thresholded) output
-    return pairs.dropDuplicates(["id_a", "id_b"]).select(
-        "id_a", "id_b", F.round("_cos", 6).alias("cosine")
-    )
+# --- blocked-GEMM k-NN graph and hard negatives -------------------------
 
 
 def _gemm_candidates(
@@ -1306,122 +743,7 @@ def hard_negatives(
     return _rescore_topk(c, cands, k, id_col, "negative_id")
 
 
-def ann_knn_graph_ivf(
-    corpus: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
-    fit_sample_limit: int = 25_000,
-    centers=None,
-) -> DataFrame:
-    """APPROXIMATE k-NN graph — the 100 TB path where knn_graph's exact
-    O(n^2 d) GEMM is unaffordable. IVF formulation: every vector files
-    into its nearest centroid's inverted list (one Arrow assignment
-    pass), every vector PROBES its nprobe nearest centroids, and
-    scoring joins probes to lists on the cluster id — a plain shuffle
-    equi join whose per-cluster work is |cluster| x (probes landing
-    there), i.e. ~nprobe/n_clusters of the exact pair count, adapting
-    to the data distribution like every IVF path here.
-
-    Unlike ann_topk_ivf (whose handful of query probes BROADCAST), the
-    probe side is the whole corpus, so both sides shuffle on cluster —
-    the correct shape when queries == corpus. Scoring runs as ONE
-    cogrouped applyInPandas per cluster: a (probe-batch x |members|)
-    GEMM that emits only each probe's within-cluster top-k — the
-    row-explosion alternative (join -> |cluster| x |probes| scored
-    rows -> global window) materializes ~nprobe/n_clusters of the full
-    pair matrix through the shuffle and was measured 2-3x slower at
-    sf0.1. The global window then ranks <= nprobe*k candidates per
-    query. Output: (query_id, neighbor_id, cosine, rnk) — feed through
-    with_recall_at_k against knn_graph at test scale for the gate.
-
-    Task memory: cogrouped applyInPandas MATERIALIZES both sides of a
-    group before the function runs, so a task holds one inverted list
-    PLUS every probe row landing on that cluster (~nprobe/n_clusters of
-    the corpus); the probe_batch loop bounds only the GEMM
-    intermediate, not probe storage. Size n_clusters so
-    (1 + nprobe) * n / n_clusters vectors fit an executor — stricter
-    than the classic members-only IVF rule; n_clusters ~ sqrt(n)
-    satisfies it with room at any realistic scale.
-    """
-    import numpy as np
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("c_vec"),
-    )
-    if centers is None:
-        centers = _fit_centroids(c, n_clusters, seed, fit_sample_limit)
-    assigned = c.withColumn("cluster", _assign_factory(centers)(F.col("c_vec")))
-    probes = corpus.select(
-        F.col(id_col).alias("query_id"),
-        as_double(F.col(vec_col)).alias("q_vec"),
-    ).withColumn(
-        "cluster",
-        F.explode(_probe_factory(centers, nprobe)(F.col("q_vec"))),
-    )
-
-    def cluster_topk(left: "pd.DataFrame", right: "pd.DataFrame"):
-        import pandas as pd
-
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cos": []}
-            )
-        m_ids = right["neighbor_id"].to_numpy(dtype=np.int64)
-        m_mat = np.stack([np.asarray(v, dtype=np.float64) for v in right["c_vec"]])
-        m_mat = m_mat / np.maximum(
-            np.linalg.norm(m_mat, axis=1, keepdims=True), 1e-12
-        )
-        # the member list is held once (that's what sizing n_clusters
-        # bounds); probes stream through in fixed batches so the GEMM
-        # intermediate is (batch x members), never (all probes x members)
-        probe_batch = 8192
-        frames = []
-        for lo in range(0, len(left), probe_batch):
-            chunk = left.iloc[lo : lo + probe_batch]
-            q_ids = chunk["query_id"].to_numpy(dtype=np.int64)
-            q_mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in chunk["q_vec"]]
-            )
-            q_mat = q_mat / np.maximum(
-                np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12
-            )
-            sims = q_mat @ m_mat.T
-            sims[q_ids[:, None] == m_ids[None, :]] = -np.inf  # self
-            take = min(k, sims.shape[1])
-            idx = np.argpartition(-sims, take - 1, axis=1)[:, :take]
-            flat = sims[np.repeat(np.arange(len(q_ids)), take), idx.ravel()]
-            keep = ~np.isinf(-flat)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(q_ids, take)[keep],
-                        "neighbor_id": m_ids[idx.ravel()][keep],
-                        "cos": flat[keep],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
-
-    scored = (
-        probes.groupBy("cluster")
-        .cogroup(assigned.groupBy("cluster"))
-        .applyInPandas(
-            cluster_topk, schema="query_id long, neighbor_id long, cos double"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rnk")
-    )
+# --- diversity sampling --------------------------------------------------
 
 
 def kcenter_sample(
@@ -1576,438 +898,3 @@ def mmr_select(
         out.append((step, top["_id"], float(top["_score"])))
         center_u, center_id = top["_u"], top["_id"]
     return out
-
-
-# --- IVF-PQ (product quantization) --------------------------------------
-
-
-def fit_pq_codebooks(
-    c: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    seed: int = 7,
-    fit_sample_limit: int = 25_000,
-    sample_x=None,
-):
-    """Driver-side product-quantization codebook fit (Jégou et al.,
-    "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
-    split the (unit-normalized) vector into ``m`` contiguous subspaces
-    and run bounded Lloyd per subspace on the same deterministic
-    hash-ordered sample discipline as ``_fit_centroids`` (pass
-    ``sample_x`` to reuse an already-collected :func:`_fit_sample`).
-
-    Returns an (m, n_codes, dim/m) float64 ndarray. Driver memory is
-    the sample (bounded) + the codebooks (KBs); at 100 TB nothing about
-    the fit changes — codebook quality saturates at tens of thousands
-    of samples.
-
-    ``c`` must be (neighbor_id, c_vec) like the other kernels.
-    """
-    import numpy as np
-
-    X = _fit_sample(c, fit_sample_limit) if sample_x is None else sample_x
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    dim = X.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    sub = dim // m
-    rng = np.random.RandomState(seed)
-    books = np.zeros((m, n_codes, sub))
-    for j in range(m):
-        Xj = X[:, j * sub : (j + 1) * sub]
-        ctr = Xj[rng.choice(len(Xj), size=min(n_codes, len(Xj)), replace=False)]
-        for _ in range(8):
-            d2 = ((Xj[:, None, :] - ctr[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for t in range(len(ctr)):
-                members = Xj[assign == t]
-                if len(members):
-                    ctr[t] = members.mean(axis=0)
-        books[j, : len(ctr)] = ctr
-    return books
-
-
-def pq_encode(
-    df: DataFrame, books, vec_col: str = "c_vec", out_col: str = "pq_codes"
-) -> DataFrame:
-    """One narrow Arrow pass appending each vector's PQ code word —
-    ``m`` tinyints replacing dim floats (64x smaller for dim=64/m=8:
-    THIS is why PQ is the 100 TB in-memory path; the raw vectors stay
-    on disk for the refine step only). Encoding = per-subspace nearest
-    codebook entry in L2 over the unit-normalized vector."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, ByteType
-
-    m, n_codes, sub = books.shape
-    flat = books  # broadcast via closure; a few KB
-
-    @F.pandas_udf(ArrayType(ByteType()))
-    def encode(v):
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        X = np.stack(v.to_numpy())
-        X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        codes = np.zeros((len(X), m), dtype=np.int8)
-        for j in range(m):
-            Xj = X[:, j * sub : (j + 1) * sub]
-            d2 = ((Xj[:, None, :] - flat[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = d2.argmin(axis=1).astype(np.int8)
-        return pd.Series(list(codes))
-
-    return df.withColumn(out_col, encode(F.col(vec_col)))
-
-
-def ann_topk_ivfpq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    nprobe: int = 8,
-    m: int = 16,
-    n_codes: int = 32,
-    refine_factor: int = 8,
-    seed: int = 42,
-    fit_sample_limit: int = 25_000,
-) -> DataFrame:
-    """IVF-PQ with asymmetric-distance (ADC) scoring and exact refine —
-    the standard billion-scale ANN architecture (FAISS IVFPQ shape):
-
-    1. coarse IVF: Lloyd centroids partition the corpus; queries probe
-       ``nprobe`` clusters (reusing the IVF-flat machinery);
-    2. PQ: every corpus vector compresses to ``m`` one-byte codes
-       (pq_encode) — the probed candidate set is scored WITHOUT
-       touching raw vectors: per query, one (m x n_codes) lookup table
-       of subspace inner products, then approx_cos = sum of m table
-       lookups per candidate (vectorized fancy-indexing, applyInPandas
-       grouped by query);
-    3. refine: the approx top-(k * refine_factor) shortlist re-scores
-       EXACT cosine against the raw vectors (one semi-joined fetch) and
-       the final top-k ranks on that — so PQ error can only cost
-       recall, never corrupt a returned similarity.
-
-    Scale: the scan path reads nprobe/n_clusters of the corpus as
-    8-byte codes instead of 512-byte vectors (~64x less memory
-    bandwidth — the entire point); raw vectors are touched for
-    |queries| * k * refine_factor rows only. Returns the same
-    (query_id, neighbor_id, cosine, rnk) shape as the other ANN ops.
-    """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("c_vec")
-    )
-    # one sample collection feeds both driver-side fits (identical
-    # results — both always drew this exact hash-ordered sample)
-    sample_x = _fit_sample(c, fit_sample_limit)
-    centers = _fit_centroids(c, n_clusters, seed, fit_sample_limit,
-                             sample_x=sample_x)
-    books = fit_pq_codebooks(c, m=m, n_codes=n_codes,
-                             fit_sample_limit=fit_sample_limit,
-                             sample_x=sample_x)
-    assigned = pq_encode(
-        c.withColumn("cluster", _assign_factory(centers)(F.col("c_vec"))), books
-    ).select("neighbor_id", "cluster", "pq_codes")
-
-    # probes is referenced twice in the refine plan (candidate join +
-    # the per-query vector fetch); it is |queries| * nprobe rows, so an
-    # eager localCheckpoint stops the whole probe lineage (queries scan
-    # + assign UDF) from evaluating twice
-    probes = _query_probes(queries, centers, nprobe, id_col, vec_col
-                           ).localCheckpoint(eager=False)  # lazy (r15)
-    return _ivfpq_adc_refine(c, assigned, probes, books, k, refine_factor)
-
-
-def _ivfpq_adc_refine(
-    c: DataFrame,
-    assigned: DataFrame,
-    probes: DataFrame,
-    books,
-    k: int,
-    refine_factor: int,
-) -> DataFrame:
-    """Shared ADC + exact-refine tail of IVF-PQ search. ``c`` is the raw
-    (neighbor_id, c_vec) frame (refine only); ``assigned`` the
-    (neighbor_id, cluster, pq_codes) code table (one-shot or the
-    persisted index's partition-pruned scan); ``probes`` from
-    _query_probes with (query_id, q_vec, cluster) rows."""
-    cand = assigned.join(F.broadcast(probes), "cluster").select(
-        "query_id", "cluster", "q_vec", "neighbor_id", "pq_codes"
-    )
-
-    import numpy as np
-    import pandas as pd
-
-    shortlist = k * refine_factor
-    mm, nn, sub = books.shape
-
-    def adc(key, pdf):
-        # one group per (query, probed cluster): build the LUT once,
-        # score that inverted list's code words with fancy indexing,
-        # keep a per-cluster shortlist. Grouping by (query, cluster) —
-        # not by query alone — bounds applyInPandas's in-memory group
-        # at ONE inverted list (~|corpus|/n_clusters), where a
-        # per-query group would materialize every probed list at once
-        # (nprobe/n_clusters of the corpus — OOM at scale).
-        q = np.asarray(pdf["q_vec"].iloc[0], dtype=np.float64)
-        q = q / max(np.linalg.norm(q), 1e-12)
-        lut = np.zeros((mm, nn))
-        for j in range(mm):
-            lut[j] = books[j] @ q[j * sub : (j + 1) * sub]
-        codes = np.stack(pdf["pq_codes"].to_numpy()).astype(np.int64)
-        scores = lut[np.arange(mm)[None, :], codes].sum(axis=1)
-        take = min(shortlist, len(pdf))
-        idx = np.argpartition(-scores, take - 1)[:take]
-        return pd.DataFrame(
-            {
-                "query_id": pdf["query_id"].iloc[0],
-                "neighbor_id": pdf["neighbor_id"].iloc[idx],
-                "adc_score": scores[idx],
-            }
-        )
-
-    # per-cluster shortlists -> global approx shortlist per query (the
-    # window ranks nprobe * shortlist tiny rows, never the full lists)
-    per_cluster = cand.groupBy("query_id", "cluster").applyInPandas(
-        adc, "query_id long, neighbor_id long, adc_score double"
-    )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id")
-    )
-    approx = (
-        per_cluster.withColumn("_r", F.row_number().over(wa))
-        .filter(F.col("_r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    # exact refine on the shortlist only; the query vectors come off the
-    # probe frame (one row per query after dedup — tiny, broadcast)
-    q = probes.select("query_id", "q_vec").dropDuplicates(["query_id"])
-    fetched = (
-        approx.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", cosine_batch(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        fetched.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rnk")
-    )
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    m: int = 16,
-    n_codes: int = 32,
-    seed: int = 42,
-    fit_sample_limit: int = 25_000,
-    fit_df: DataFrame | None = None,
-) -> None:
-    """Persist an IVF-PQ index (the r8 verdict's missing amortization):
-    coarse centroids + PQ codebooks (tiny parquet sidecars) + the
-    per-vector code table written PARTITIONED BY (ingest_batch,
-    cluster). The one-shot ann_topk_ivfpq re-fits centroids AND
-    codebooks AND re-encodes the whole corpus per call; this build pays
-    that once, and query time reads ~nprobe/n_clusters of 8-ish-byte
-    code words (partition pruning, see query_ivfpq_index) — the FAISS
-    on-disk IVFPQ shape.
-
-    Same deterministic fits as the one-shot path (hash-ordered sample,
-    seeded Lloyd), so a fresh index returns bit-identical results to
-    ann_topk_ivfpq with equal parameters (pinned in test_r9.py).
-
-    ``fit_df`` fits centroids/codebooks on a different frame than the
-    encoded corpus (train-on-sample; also the reference construction
-    for the append-path equivalence test). The ``ingest_batch=0`` leaf
-    holds the build; :func:`append_ivfpq_index` adds leafs 1, 2, ...
-    and :func:`compact_ivfpq_index` folds them.
-    """
-    import os
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("c_vec")
-    )
-    fit = (
-        c
-        if fit_df is None
-        else fit_df.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("c_vec"),
-        )
-    )
-    sample_x = _fit_sample(fit, fit_sample_limit)
-    centers = _fit_centroids(fit, n_clusters, seed, fit_sample_limit,
-                             sample_x=sample_x)
-    books = fit_pq_codebooks(
-        fit, m=m, n_codes=n_codes, fit_sample_limit=fit_sample_limit,
-        sample_x=sample_x
-    )
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(centers)],
-        "cluster int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    mm, nn, sub = books.shape
-    spark.createDataFrame(
-        [
-            (j, t, [float(x) for x in books[j, t]])
-            for j in range(mm)
-            for t in range(nn)
-        ],
-        "subspace int, code int, center array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
-    (
-        pq_encode(
-            c.withColumn("cluster", _assign_factory(centers)(F.col("c_vec"))),
-            books,
-        )
-        .select("neighbor_id", "cluster", "pq_codes")
-        .withColumn("ingest_batch", F.lit(0))
-        .repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch", "cluster")
-        .parquet(os.path.join(path, "codes"))
-    )
-    # completion marker at the index root (the cache layer's contract)
-    with open(os.path.join(path, "_SUCCESS"), "w"):
-        pass
-
-
-def _load_ivfpq_artifacts(spark, path: str):
-    """(centers, books) numpy arrays from a persisted index's sidecars
-    — shared by query and append."""
-    import os
-
-    import numpy as np
-
-    cent = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("cluster")
-        .collect()
-    )
-    centers = np.array([r["centroid"] for r in cent], dtype=np.float64)
-    cb = (
-        spark.read.parquet(os.path.join(path, "codebooks"))
-        .orderBy("subspace", "code")
-        .collect()
-    )
-    mm = 1 + max(r["subspace"] for r in cb)
-    nn = 1 + max(r["code"] for r in cb)
-    sub = len(cb[0]["center"])
-    books = np.zeros((mm, nn, sub))
-    for r in cb:
-        books[r["subspace"], r["code"]] = r["center"]
-    return centers, books
-
-
-def append_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    batch_id: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incrementally extend a persisted IVF-PQ index: assign the NEW
-    vectors to the EXISTING centroids, encode with the EXISTING
-    codebooks, and land them as the ``ingest_batch=<batch_id>`` leaf of
-    the cluster-partitioned code table — real corpora append; a
-    build-once index would force a full refit+re-encode per delivery.
-
-    Exactly-once under retry: the write is a DYNAMIC partition
-    overwrite, so re-delivering the same (batch_id, vectors) replaces
-    its own (batch, cluster) leafs instead of duplicating rows — the
-    same batch-id-keyed idempotence the streaming stores use
-    (streaming/neardup.py). Centroids/codebooks are frozen by design
-    (the FAISS add-with-fixed-quantizer contract): appended vectors get
-    exactly the codes a from-scratch encode with the original
-    artifacts would give, pinned in test_r10.py.
-    """
-    import os
-
-    if batch_id <= 0:
-        raise ValueError("append batch_id must be >= 1 (0 is the build leaf)")
-    spark = corpus.sparkSession
-    centers, books = _load_ivfpq_artifacts(spark, path)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("c_vec")
-    )
-    (
-        pq_encode(
-            c.withColumn("cluster", _assign_factory(centers)(F.col("c_vec"))),
-            books,
-        )
-        .select("neighbor_id", "cluster", "pq_codes")
-        .withColumn("ingest_batch", F.lit(int(batch_id)))
-        .repartition("cluster")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch", "cluster")
-        .parquet(os.path.join(path, "codes"))
-    )
-
-
-def compact_ivfpq_index(
-    spark,
-    path: str,
-    up_to_batch: int | None = None,
-    target_files: int = 1,
-) -> int:
-    """Fold the code table's append leafs into one compact negative-id
-    leaf, preserving the ``cluster=`` sub-partitioning (partition
-    pruning must survive the fold). Same crash-recoverable
-    rename-commit fold as the streaming stores (streaming/neardup.py
-    ``_fold_store``); ``up_to_batch`` bounds folding when an ingest is
-    still in flight. Returns the pre-fold file count (0 = no-op)."""
-    import os
-
-    from ..streaming.neardup import _fold_store
-
-    return _fold_store(
-        spark,
-        os.path.join(path, "codes"),
-        up_to_batch,
-        target_files,
-        partition_by=["cluster"],
-    )
-
-
-def query_ivfpq_index(
-    spark,
-    path: str,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 8,
-    refine_factor: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Search a persisted IVF-PQ index. The probed cluster ids become a
-    partition IN-filter on the code-table scan (reads nprobe/n_clusters
-    of the CODE bytes — raw vectors are only touched by the exact
-    refine's shortlist fetch against ``corpus``)."""
-    import os
-
-    centers, books = _load_ivfpq_artifacts(spark, path)
-
-    probes = _query_probes(queries, centers, nprobe, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
-    needed = sorted(
-        r["cluster"] for r in probes.select("cluster").distinct().collect()
-    )
-    codes = (
-        spark.read.parquet(os.path.join(path, "codes"))
-        .filter(F.col("cluster").isin(needed))
-        .select("neighbor_id", "cluster", "pq_codes")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("c_vec")
-    )
-    return _ivfpq_adc_refine(c, codes, probes, books, k, refine_factor)

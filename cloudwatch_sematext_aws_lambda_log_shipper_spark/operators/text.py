@@ -26,8 +26,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "zh": ["的", "是", "了", "在", "我"],
 }
 
-STOPWORDS = LANG_MARKERS["en"]
-
 
 def words(text: Column) -> Column:
     """Lowercased whitespace tokens."""
@@ -112,19 +110,6 @@ def _marker_token_pattern(markers: list[str]) -> str:
     consume the separating whitespace). All markers are alphanumeric/CJK
     so no escaping is needed."""
     return r"(?<!\S)(?:" + "|".join(markers) + r")(?!\S)"
-
-
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
-    """Stopword-token share, counted with one codegen'd regexp_count
-    rather than `filter(words, ...)`: higher-order-function lambdas are
-    evaluated interpreted per element, which made this (and lang_scores)
-    the engine's hottest path at bench scale."""
-    n_stop = F.regexp_count(
-        F.lower(text), F.lit(_marker_token_pattern(stopwords or STOPWORDS))
-    )
-    return n_stop.cast("double") / F.greatest(
-        F.size(words(text)), F.lit(1)
-    ).cast("double")
 
 
 def punct_ratio(text: Column) -> Column:

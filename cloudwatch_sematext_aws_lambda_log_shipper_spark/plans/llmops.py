@@ -24,8 +24,6 @@ from ..operators.dedup import (
 )
 from ..operators.multimodal import decode_image_features, with_media_meta
 from ..operators.similarity import (
-    ann_topk_ivf,
-    ann_topk_lsh,
     audit_sample_pred,
     audit_sample_sql,
     cosine_pairs_exact,
@@ -945,6 +943,47 @@ def _lsh_exact_oracle(
     return "\n".join(lines) + "\n" + _recall_tail_ctes(k, floor)
 
 
+def _index_dir(
+    spark: SparkSession,
+    sf_dir: str,
+    key: str,
+    corpus: DataFrame,
+    build,
+    supersedes: tuple[str, ...] = (),
+) -> str:
+    """Synthcache directory of a persisted ANN index over ``corpus``:
+    ``build(df, path)`` runs at most once per (embeddings fingerprint,
+    key). An entry whose format sidecar is missing or names an old
+    layout (ivf_exact.index_format_current) is removed and rebuilt, so
+    a layout change can never be served from a stale cache."""
+    import os
+    import shutil
+
+    from ..operators.ivf_exact import index_format_current
+    from .synthcache import materialize_dir
+
+    def _write(df, p):
+        build(df, p)
+        open(os.path.join(p, "_SUCCESS"), "w").close()
+
+    def _materialize():
+        return materialize_dir(
+            spark,
+            sf_dir,
+            key,
+            builder=lambda: corpus,
+            source="embeddings.parquet",
+            writer=_write,
+            supersedes=supersedes,
+        )
+
+    path = _materialize()
+    if not index_format_current(path):
+        shutil.rmtree(path)
+        path = _materialize()
+    return path
+
+
 def _ivf_fit_cached(spark: SparkSession, sf_dir: str, corpus, want_books: bool,
                     subset: str = "c10plus", n_clusters: int = 16,
                     want_codes: bool = False, pq_m: int = 16,
@@ -1132,32 +1171,20 @@ def embedding_ann_ivf_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact audit side runs the numpy fold kernel (exact_fold_topk,
     bit-identical to the oracle's per-pair arithmetic), so the timed
     per-run work is probes + partition-pruned scoring."""
-    import os as _os
-
     from ..operators.ivf_exact import (
         build_ivf_index_exact,
         exact_fold_topk,
         query_ivf_index_exact,
     )
-    from .synthcache import materialize_dir
 
     emb = _emb768(spark, sf_dir, materialize=True)
     corpus = emb.filter(F.col("vec_id") >= 10)
     queries = emb.filter(F.col("vec_id") < 10)
-
-    def _write(df, p):
-        build_ivf_index_exact(
+    path = _index_dir(
+        spark, sf_dir, "ivfx768-c8i2d768", corpus,
+        lambda df, p: build_ivf_index_exact(
             df, p, n_clusters=8, iters=2, dim=_EMB768_DIM
-        )
-        open(_os.path.join(p, "_SUCCESS"), "w").close()
-
-    path = materialize_dir(
-        spark,
-        sf_dir,
-        "ivfx768-c8i2d768",
-        builder=lambda: corpus,
-        source="embeddings.parquet",
-        writer=_write,
+        ),
     )
     ann = query_ivf_index_exact(
         spark, path, queries, k=5, nprobe=3, dim=_EMB768_DIM
@@ -1191,37 +1218,28 @@ def embedding_ann_ivfpq_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the timed per-run work is probes + partition-pruned ADC +
     exact refine. Recall floor 0.45 (measured 0.60 at sf0.01 / 0.52 at
     sf0.1 with nprobe=4/8, refine 12)."""
-    import os as _os
-
     from ..operators.ivf_exact import (
         build_ivfpq_index_exact,
         exact_fold_topk,
         query_ivfpq_index_exact,
     )
-    from .synthcache import materialize_dir
 
     emb = _emb768(spark, sf_dir, materialize=True)
     corpus = emb.filter(F.col("vec_id") >= 10)
     queries = emb.filter(F.col("vec_id") < 10)
-
-    def _write(df, p):
-        build_ivfpq_index_exact(
-            df, p, n_clusters=8, m=16, n_codes=64, iters=2, pq_iters=1,
-            dim=_EMB768_DIM,
-        )
-        open(_os.path.join(p, "_SUCCESS"), "w").close()
-
     # hyperparameters live in the cache key (ADVICE r13): a future
     # param tune rebuilds instead of silently serving a stale index;
-    # trailing "a" = the r16 array code layout
-    path = materialize_dir(
-        spark,
-        sf_dir,
-        "ivfpqx768-c8m16n64i2p1a",
-        builder=lambda: corpus,
-        source="embeddings.parquet",
-        writer=_write,
-        supersedes=("ivfpqx768", "ivfpqx768-c8m16n64i2p1"),
+    # trailing "l" = the ingest-leaf layout (codes and vectors under
+    # ingest_batch=0; the r16 array-layout "a" key is retired)
+    path = _index_dir(
+        spark, sf_dir, "ivfpqx768-c8m16n64i2p1l", corpus,
+        lambda df, p: build_ivfpq_index_exact(
+            df, p, n_clusters=8, m=16, n_codes=64, iters=2, pq_iters=1,
+            dim=_EMB768_DIM,
+        ),
+        supersedes=(
+            "ivfpqx768", "ivfpqx768-c8m16n64i2p1", "ivfpqx768-c8m16n64i2p1a",
+        ),
     )
     ann = query_ivfpq_index_exact(
         spark, path, queries, k=5, nprobe=4, refine_factor=12, m=16,
@@ -1258,30 +1276,20 @@ def embedding_ann_lsh_768(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation, the partition-pruned bucket scan, fold scoring and
     the rank execute; bit-equal to the one-shot path by construction
     (same `_lsh_bucket` kernel built the rows — pinned in pytest)."""
-    import os as _os
-
     from ..operators.ivf_exact import (
         build_lsh_index_exact,
         exact_fold_topk,
         query_lsh_index_exact,
     )
-    from .synthcache import materialize_dir
 
     emb = _emb768(spark, sf_dir, materialize=True)
     corpus = emb.filter(F.col("vec_id") >= 10)
     queries = emb.filter(F.col("vec_id") < 10)
-
-    def _write(df, p):
-        build_lsh_index_exact(df, p, num_planes=4, dim=_EMB768_DIM)
-        open(_os.path.join(p, "_SUCCESS"), "w").close()
-
-    path = materialize_dir(
-        spark,
-        sf_dir,
-        "lshx768-p4",
-        builder=lambda: corpus,
-        source="embeddings.parquet",
-        writer=_write,
+    path = _index_dir(
+        spark, sf_dir, "lshx768-p4", corpus,
+        lambda df, p: build_lsh_index_exact(
+            df, p, num_planes=4, dim=_EMB768_DIM
+        ),
     )
     ann = query_lsh_index_exact(spark, path, queries, k=5, num_planes=4,
                                 dim=_EMB768_DIM)
@@ -1303,30 +1311,18 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     opt r15: probes the persisted bucketed-normalized corpus
     (`lshx-p4` synthcache key — see embedding_ann_lsh_768); bit-equal
     to the one-shot ann_topk_lsh_exact by construction."""
-    import os as _os
-
     from ..operators.ivf_exact import (
         build_lsh_index_exact,
         exact_fold_topk,
         query_lsh_index_exact,
     )
-    from .synthcache import materialize_dir
 
     emb = _emb(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") >= 10)
     queries = emb.filter(F.col("vec_id") < 10)
-
-    def _write(df, p):
-        build_lsh_index_exact(df, p, num_planes=4, dim=64)
-        open(_os.path.join(p, "_SUCCESS"), "w").close()
-
-    path = materialize_dir(
-        spark,
-        sf_dir,
-        "lshx-p4",
-        builder=lambda: corpus,
-        source="embeddings.parquet",
-        writer=_write,
+    path = _index_dir(
+        spark, sf_dir, "lshx-p4", corpus,
+        lambda df, p: build_lsh_index_exact(df, p, num_planes=4, dim=64),
     )
     ann = query_lsh_index_exact(spark, path, queries, k=5, num_planes=4,
                                 dim=64)
@@ -2582,31 +2578,16 @@ def embedding_ann_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-shot embedding_ann_ivf by construction (same exact-arith
     fit/assignment/scoring — pinned in pytest), so the SAME chained-CTE
     oracle replays this query, persisted layout and all."""
-    import os
-
     from ..operators.ivf_exact import (
         build_ivf_index_exact,
         exact_fold_topk,
         query_ivf_index_exact,
     )
-    from .synthcache import materialize_dir
 
     emb = _emb(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") >= 10)
     queries = emb.filter(F.col("vec_id") < 10)
-
-    def _write(df, p):
-        build_ivf_index_exact(df, p)
-        open(os.path.join(p, "_SUCCESS"), "w").close()
-
-    path = materialize_dir(
-        spark,
-        sf_dir,
-        "ivfx",
-        builder=lambda: corpus,
-        source="embeddings.parquet",
-        writer=_write,
-    )
+    path = _index_dir(spark, sf_dir, "ivfx", corpus, build_ivf_index_exact)
     ann = query_ivf_index_exact(spark, path, queries, k=5)
     # r15 opt: numpy fold-kernel audit (see embedding_ann_ivf); this
     # site previously ran the fully-interpreted HOF cosine (no dim arg)
@@ -5278,36 +5259,25 @@ def embedding_ann_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding_ann_ivfpq by construction (same exact-arith fits,
     encoding and ADC — pinned in pytest), so the SAME chained-CTE
     oracle replays it end-to-end."""
-    import os
-
     from ..operators.ivf_exact import (
         build_ivfpq_index_exact,
         exact_fold_topk,
         query_ivfpq_index_exact,
     )
-    from .synthcache import materialize_dir
 
     emb = _emb(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") >= 10)
     queries = emb.filter(F.col("vec_id") < 10)
-
-    def _write(df, p):
-        build_ivfpq_index_exact(df, p, m=16, n_codes=64)
-        open(os.path.join(p, "_SUCCESS"), "w").close()
-
     # hyperparameters pinned in the key (ADVICE r13); m16x64 is the
     # operating-curve recommendation (r15 — supersedes the saturating
-    # m4x16 point); trailing "a" = the r16 array code layout (a format
+    # m4x16 point); trailing "l" = the ingest-leaf layout (a format
     # change is a rebuild, never a silent stale read)
-    path = materialize_dir(
-        spark,
-        sf_dir,
-        "ivfpqx-c16m16n64i3p2a",
-        builder=lambda: corpus,
-        source="embeddings.parquet",
-        writer=_write,
+    path = _index_dir(
+        spark, sf_dir, "ivfpqx-c16m16n64i3p2l", corpus,
+        lambda df, p: build_ivfpq_index_exact(df, p, m=16, n_codes=64),
         supersedes=(
             "ivfpqx", "ivfpqx-c16m4n16i3p2", "ivfpqx-c16m16n64i3p2",
+            "ivfpqx-c16m16n64i3p2a",
         ),
     )
     ann = query_ivfpq_index_exact(spark, path, queries, k=5, m=16)

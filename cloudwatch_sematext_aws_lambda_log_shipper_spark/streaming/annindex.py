@@ -1,60 +1,58 @@
-"""Streaming IVF-PQ index ingest: maintain the persisted ANN index
-(operators/similarity.build_ivfpq_index) from a Structured Streaming
-source via ``foreachBatch`` — the shape a production embedding index
-actually runs (vectors arrive continuously; the index must stay
-queryable without a full refit+re-encode per delivery).
+"""Streaming IVF-PQ index ingest: maintain the persisted exact-arith
+ANN index (operators/ivf_exact.build_ivfpq_index_exact) from a
+Structured Streaming source via ``foreachBatch`` — the shape a
+production embedding index actually runs (vectors arrive continuously;
+the index must stay queryable without a full refit+re-encode per
+delivery).
 
-Composition of existing pieces, no new shuffle machinery:
-- batch 0 BOOTSTRAPS the index: centroids + PQ codebooks are fit on
-  the first delivery and frozen from then on (the FAISS
-  train-then-add contract — the same freeze the batch append path
-  pins in test_r10.py). The build write is a full overwrite, so a
-  retried bootstrap is idempotent.
-- batch n >= 1 APPENDS: assign to the frozen centroids, encode with
-  the frozen codebooks, land as the ``ingest_batch=n`` leaf of the
-  cluster-partitioned code table via DYNAMIC partition overwrite —
-  a retried micro-batch replaces its own (batch, cluster) leafs, the
-  same exactly-once idempotence as the streaming near-dup store
+A thin caller of the index's own operations, no new machinery:
+- batch 0 BOOTSTRAPS the index (build_ivfpq_index_exact): centroids +
+  PQ codebooks are fit on the first delivery and frozen from then on
+  (the FAISS train-then-add contract). The build is a full overwrite,
+  so a retried bootstrap is idempotent.
+- batch n >= 1 APPENDS (append_ivfpq_index_exact): the batch is
+  encoded with the frozen quantizer and lands as the
+  ``ingest_batch=n`` leaf of the code and vector tables via DYNAMIC
+  partition overwrite — a retried micro-batch replaces its own leafs,
+  the same exactly-once idempotence as the streaming near-dup store
   (streaming/neardup.py) and the log-table sink.
-- raw vectors are persisted beside the codes (``vectors/``, one
-  ``ingest_batch=n`` leaf per batch, same overwrite discipline), so
-  the index is SELF-CONTAINED: the exact-refine shortlist fetch in
-  query() reads the store, not some external table that may lag the
-  stream.
+- the index stores its normalized vectors, so it is SELF-CONTAINED:
+  the exact refine in ``query`` reads the index, not some external
+  table that may lag the stream.
 
 Scale: per batch the work is one narrow assign+encode pass over the
-batch's vectors plus one partitioned write — no store-sized reads on
-the hot path (centroid/codebook sidecars are tiny and cached by the
-driver per batch). Query cost is unchanged from the batch index:
-probed cluster ids become a partition IN-filter on the code table.
-Small-file growth is bounded by ``compact`` — the shared
-crash-recoverable fold (streaming/neardup._fold_store), checkpoint-
-aware so an in-flight batch's leaf is never folded under a retry.
+batch's vectors plus two partitioned writes — no store-sized reads on
+the hot path (the centroid/codebook sidecars are tiny). Query cost is
+the batch index's: probed cluster ids become a partition IN-filter on
+the code table. Small-file growth is bounded by ``compact`` — the
+shared crash-recoverable fold (compact_ivfpq_index_exact),
+checkpoint-aware so an in-flight batch's leaf is never folded under a
+retry.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import (
-    append_ivfpq_index,
-    build_ivfpq_index,
-    query_ivfpq_index,
+from ..operators.ivf_exact import (
+    _load_ivfpq_artifacts,
+    append_ivfpq_index_exact,
+    build_ivfpq_index_exact,
+    compact_ivfpq_index_exact,
+    query_ivfpq_index_exact,
 )
-from .neardup import _fold_store
 
 
 class StreamingIVFPQIngest:
-    """Micro-batch maintainer of a persisted IVF-PQ index.
+    """Micro-batch maintainer of a persisted exact-arith IVF-PQ index.
 
     Use ``process_batch`` from a ``foreachBatch`` hook (or call it
     directly in tests/backfills). Batch ids follow the streaming
     engine's: 0 bootstraps (fit + build), n >= 1 appends with the
     quantizer frozen — so replaying a checkpointed stream reproduces
-    the index bit-identically (pinned in test_r10.py).
+    the index bit-identically (pinned in tests/test_streaming_ann.py).
+    The vector dimension comes from the first batch.
     """
 
     def __init__(
@@ -65,43 +63,24 @@ class StreamingIVFPQIngest:
         n_clusters: int = 16,
         m: int = 16,
         n_codes: int = 32,
-        seed: int = 42,
-        fit_sample_limit: int = 25_000,
     ):
         self.index_dir = index_dir
-        self.vectors_path = os.path.join(index_dir, "vectors")
         self.id_col = id_col
         self.vec_col = vec_col
         self.n_clusters = n_clusters
         self.m = m
         self.n_codes = n_codes
-        self.seed = seed
-        self.fit_sample_limit = fit_sample_limit
-
-    # -- ingest --------------------------------------------------------
-
-    def _store_vectors(self, batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.select(self.id_col, self.vec_col)
-            .withColumn("ingest_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.vectors_path)
-        )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """One micro-batch: bootstrap (batch 0) or frozen-quantizer
-        append (batch n). Raw vectors land first — if the code write
-        is interrupted, the retry's overwrite supersedes both."""
+        append (batch n; fails fast when no index was bootstrapped)."""
         batch_id = int(batch_id)
-        self._store_vectors(batch_df, batch_id)
         if batch_id == 0:
-            # bootstrap is a full overwrite: a retry (checkpoint not
-            # yet committed) rebuilds from the identical batch, and a
-            # fresh-checkpoint replay re-derives the same frozen
-            # quantizer from the same first delivery.
-            build_ivfpq_index(
+            # a retry (checkpoint not yet committed) rebuilds from the
+            # identical batch, and a fresh-checkpoint replay re-derives
+            # the same frozen quantizer from the same first delivery
+            dim = batch_df.agg(F.max(F.size(self.vec_col))).first()[0]
+            build_ivfpq_index_exact(
                 batch_df,
                 self.index_dir,
                 id_col=self.id_col,
@@ -109,24 +88,16 @@ class StreamingIVFPQIngest:
                 n_clusters=self.n_clusters,
                 m=self.m,
                 n_codes=self.n_codes,
-                seed=self.seed,
-                fit_sample_limit=self.fit_sample_limit,
+                dim=dim,
             )
             return
-        if not os.path.exists(os.path.join(self.index_dir, "_SUCCESS")):
-            raise RuntimeError(
-                "append before bootstrap: batch 0 never committed an index "
-                f"at {self.index_dir}"
-            )
-        append_ivfpq_index(
+        append_ivfpq_index_exact(
             batch_df,
             self.index_dir,
-            batch_id=batch_id,
+            batch_id,
             id_col=self.id_col,
             vec_col=self.vec_col,
         )
-
-    # -- maintenance ----------------------------------------------------
 
     def compact(
         self,
@@ -135,31 +106,17 @@ class StreamingIVFPQIngest:
         checkpoint_dir: str | None = None,
         target_files: int = 1,
     ) -> dict[str, int]:
-        """Fold committed append leafs of BOTH store tables (codes keep
-        their ``cluster=`` sub-partitioning so probe pruning survives;
-        vectors fold flat). ``checkpoint_dir`` bounds folding at the
-        stream's last committed batch — same refusal contract as
+        """Fold committed leafs of the code and vector tables
+        (compact_ivfpq_index_exact). ``checkpoint_dir`` bounds folding
+        at the stream's last committed batch — same refusal contract as
         StreamingNearDup.compact. Returns {path: files_before}."""
         if checkpoint_dir is not None:
             from ..control import _last_committed_batch
 
             up_to_batch = _last_committed_batch(checkpoint_dir)
-        out: dict[str, int] = {}
-        codes = os.path.join(self.index_dir, "codes")
-        n = _fold_store(spark, codes, up_to_batch, target_files,
-                        partition_by=["cluster"])
-        if n:
-            out[codes] = n
-        n = _fold_store(spark, self.vectors_path, up_to_batch, target_files)
-        if n:
-            out[self.vectors_path] = n
-        return out
-
-    # -- search ---------------------------------------------------------
-
-    def corpus(self, spark: SparkSession) -> DataFrame:
-        """The ingested raw vectors (refine side), as of now."""
-        return spark.read.parquet(self.vectors_path).drop("ingest_batch")
+        return compact_ivfpq_index_exact(
+            spark, self.index_dir, up_to_batch, target_files
+        )
 
     def query(
         self,
@@ -169,17 +126,19 @@ class StreamingIVFPQIngest:
         nprobe: int = 8,
         refine_factor: int = 8,
     ) -> DataFrame:
-        """Search the live index; identical semantics/cost shape to
-        query_ivfpq_index on a batch-built index (cluster partition
-        IN-filter on the code scan, exact refine over the shortlist)."""
-        return query_ivfpq_index(
+        """Search the live index (query_ivfpq_index_exact: cluster
+        partition IN-filter on the code scan, ADC shortlist, exact
+        refine over the stored normalized vectors)."""
+        centers, _books = _load_ivfpq_artifacts(spark, self.index_dir)
+        return query_ivfpq_index_exact(
             spark,
             self.index_dir,
-            self.corpus(spark),
             queries,
             k=k,
             nprobe=nprobe,
             refine_factor=refine_factor,
             id_col=self.id_col,
             vec_col=self.vec_col,
+            m=self.m,
+            dim=len(centers[0]),
         )

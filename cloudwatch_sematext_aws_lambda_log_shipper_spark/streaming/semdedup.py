@@ -4,18 +4,22 @@ embedding-space sibling of streaming/neardup.py: new vectors arriving
 on a stream are checked for near-duplicate MEANING against everything
 already ingested, not only their own batch.
 
-Index discipline: the coarse centroids are FIT ONCE (first batch, or
-passed in) and persisted beside the store — cluster membership must
-not drift per batch or the candidate sets stop being comparable.
-Every vector is multi-assigned to its ``n_assign`` nearest centroids
-(the SemDeDup boundary-recall fix); a pair is compared when the two
-share ANY assigned cluster.
+Index discipline: the coarse centroids are FIT ONCE (first batch, by
+the exact-arith fit_centroids_exact, or passed in) and persisted beside
+the store — cluster membership must not drift per batch or the
+candidate sets stop being comparable. Every vector is multi-assigned to
+its ``n_assign`` nearest centroids (the SemDeDup boundary-recall fix);
+a pair is compared when the two share ANY assigned cluster.
 
-Per batch:
-- intra-batch pairs: operators/similarity.semdedup_pairs over the
-  batch with the PINNED centers (same per-cluster blocked GEMM);
+Per batch, all under the exact-arithmetic contract of
+operators/ivf_exact.py:
+- intra-batch pairs: semdedup_pairs_exact over the batch with the
+  PINNED centers;
 - cross-batch pairs: cogrouped applyInPandas on cluster id — one
-  (new x stored) GEMM per cluster slice, never a pair-row join;
+  (new x stored) _exact_fold_gram block per cluster slice over the
+  stored NORMALIZED vectors, never a pair-row join. It is the batch
+  operator's arithmetic, so the alert union over a stream equals
+  semdedup_pairs_exact over the union bit for bit;
 - alerts materialize BEFORE the store update (a vector never matches
   itself through the store); re-delivered batches collapse to one
   alert per unordered pair, exactly like the MinHash guard.
@@ -38,11 +42,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import (
-    _fit_centroids,
-    _probe_factory,
-    as_double,
-    semdedup_pairs,
+from ..operators.ivf_exact import (
+    _exact_fold_gram,
+    _query_probes_exact,
+    _read_artifact_rows,
+    _unit,
+    fit_centroids_exact,
+    semdedup_pairs_exact,
 )
 from .neardup import _fold_store
 
@@ -51,7 +57,8 @@ class StreamingSemDedup:
     """Micro-batch semantic-dup guard over a persisted vector store.
 
     ``process_batch`` returns (new_id, old_id, cosine) alert pairs —
-    old_id from any prior batch or the same batch.
+    old_id from any prior batch or the same batch. The vector dimension
+    comes from the pinned centroids (or the first batch when fitting).
     """
 
     def __init__(
@@ -62,8 +69,6 @@ class StreamingSemDedup:
         threshold: float = 0.97,
         n_clusters: int = 16,
         n_assign: int = 2,
-        seed: int = 42,
-        fit_sample_limit: int = 25_000,
         centers=None,
     ):
         self.vectors_path = os.path.join(store_dir, "vectors")
@@ -73,28 +78,23 @@ class StreamingSemDedup:
         self.threshold = float(threshold)
         self.n_clusters = n_clusters
         self.n_assign = n_assign
-        self.seed = seed
-        self.fit_sample_limit = fit_sample_limit
         self._centers = centers
 
-    def _ensure_centers(self, c: DataFrame, spark: SparkSession):
+    def _ensure_centers(self, batch_df: DataFrame, spark: SparkSession):
         """Pin the centroid set: passed in > persisted > fit on the
         first batch (then persisted, so a restart keeps the SAME
         geometry)."""
-        import numpy as np
-
         if self._centers is None and os.path.isdir(self.centroids_path):
-            rows = (
-                spark.read.parquet(self.centroids_path)
-                .orderBy("cluster")
-                .collect()
+            rows = sorted(
+                _read_artifact_rows(spark, self.centroids_path),
+                key=lambda r: r["cluster"],
             )
-            self._centers = np.array(
-                [r["centroid"] for r in rows], dtype=np.float64
-            )
+            self._centers = [list(r["centroid"]) for r in rows]
         if self._centers is None:
-            self._centers = _fit_centroids(
-                c, self.n_clusters, self.seed, self.fit_sample_limit
+            dim = batch_df.agg(F.max(F.size(self.vec_col))).first()[0]
+            self._centers = fit_centroids_exact(
+                batch_df, self.n_clusters, id_col=self.id_col,
+                vec_col=self.vec_col, dim=dim,
             )
         if not os.path.isdir(self.centroids_path):
             spark.createDataFrame(
@@ -106,31 +106,19 @@ class StreamingSemDedup:
             ).coalesce(1).write.mode("overwrite").parquet(self.centroids_path)
         return self._centers
 
-    def _assigned(self, c: DataFrame, centers) -> DataFrame:
-        m = min(max(int(self.n_assign), 1), len(centers))
-        return c.select(
-            F.col("neighbor_id").alias("_id"),
-            F.col("c_vec").alias("_v"),
-            F.explode(_probe_factory(centers, m)(F.col("c_vec"))).alias(
-                "cluster"
-            ),
-        )
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
         spark = batch_df.sparkSession
-        c = batch_df.select(
-            F.col(self.id_col).alias("neighbor_id"),
-            as_double(F.col(self.vec_col)).alias("c_vec"),
-        )
-        centers = self._ensure_centers(c, spark)
+        centers = self._ensure_centers(batch_df, spark)
+        dim = len(centers[0])
 
-        intra = semdedup_pairs(
+        intra = semdedup_pairs_exact(
             batch_df,
             threshold=self.threshold,
+            n_assign=self.n_assign,
             id_col=self.id_col,
             vec_col=self.vec_col,
+            dim=dim,
             centers=centers,
-            n_assign=self.n_assign,
         ).select(
             F.col("id_a").alias("new_id"),
             F.col("id_b").alias("old_id"),
@@ -140,17 +128,21 @@ class StreamingSemDedup:
         # LAZY cut (opt r15): two consumers (cross-batch scoring inside
         # the alerts eager checkpoint, then the store write) — the
         # alerts materialization below is the first action and fills
-        # these blocks in its own job; eager here only added a
-        # dedicated job per micro-batch. Pre-update ordering unchanged.
-        new_assigned = self._assigned(c, centers).localCheckpoint(eager=False)
+        # these blocks in its own job. Pre-update ordering unchanged.
+        un = _unit(batch_df, self.id_col, self.vec_col, "query_id", dim,
+                   materialize=True)
+        new_assigned = (
+            _query_probes_exact(un, centers, self.n_assign, dim)
+            .select(
+                F.col("query_id").alias("_id"),
+                F.col("_qu").alias("_u"),
+                F.col("_cl").alias("cluster"),
+            )
+            .localCheckpoint(eager=False)
+        )
         if os.path.isdir(self.vectors_path):
-            store = (
-                spark.read.parquet(self.vectors_path)
-                .select(
-                    F.col(self.id_col).alias("_id"),
-                    F.col("c_vec").alias("_v"),
-                    "cluster",
-                )
+            store = spark.read.parquet(self.vectors_path).select(
+                F.col(self.id_col).alias("_id"), "_u", "cluster"
             )
             thr = self.threshold
 
@@ -158,44 +150,28 @@ class StreamingSemDedup:
                 import numpy as np
                 import pandas as pd
 
-                empty = pd.DataFrame(
-                    {
-                        "new_id": pd.Series(dtype="int64"),
-                        "old_id": pd.Series(dtype="int64"),
-                        "_cos": pd.Series(dtype="float64"),
-                    }
-                )
                 if len(new_pdf) == 0 or len(old_pdf) == 0:
-                    return empty
-                vn = np.stack(new_pdf["_v"].to_numpy()).astype(np.float64)
-                vo = np.stack(old_pdf["_v"].to_numpy()).astype(np.float64)
-                nn = np.linalg.norm(vn, axis=1)
-                no = np.linalg.norm(vo, axis=1)
-                ids_n = new_pdf["_id"].to_numpy()
-                ids_o = old_pdf["_id"].to_numpy()
-                out = [empty]
-                B = 2048
-                for i0 in range(0, len(vn), B):
-                    for j0 in range(0, len(vo), B):
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            M = (vn[i0 : i0 + B] @ vo[j0 : j0 + B].T) / np.outer(
-                                nn[i0 : i0 + B], no[j0 : j0 + B]
-                            )
-                        ii, jj = np.nonzero(M >= thr)
-                        if len(ii):
-                            a = ids_n[ii + i0]
-                            b = ids_o[jj + j0]
-                            keep = a != b  # re-delivered doc, not a dup
-                            out.append(
-                                pd.DataFrame(
-                                    {
-                                        "new_id": a[keep],
-                                        "old_id": b[keep],
-                                        "_cos": M[ii, jj][keep],
-                                    }
-                                )
-                            )
-                return pd.concat(out, ignore_index=True)
+                    return pd.DataFrame(
+                        {
+                            "new_id": pd.Series(dtype="int64"),
+                            "old_id": pd.Series(dtype="int64"),
+                            "_cos": pd.Series(dtype="float64"),
+                        }
+                    )
+                # the batch operator's arithmetic: left-fold dots of the
+                # normalized vectors, thresholded before rounding
+                cos = _exact_fold_gram(
+                    np.stack(new_pdf["_u"].to_numpy()),
+                    np.stack(old_pdf["_u"].to_numpy()),
+                )
+                ii, jj = np.nonzero(cos >= thr)
+                a = new_pdf["_id"].to_numpy()[ii]
+                b = old_pdf["_id"].to_numpy()[jj]
+                keep = a != b  # re-delivered doc, not a dup
+                return pd.DataFrame(
+                    {"new_id": a[keep], "old_id": b[keep],
+                     "_cos": cos[ii, jj][keep]}
+                )
 
             cross = (
                 new_assigned.groupBy("cluster")
@@ -227,7 +203,6 @@ class StreamingSemDedup:
 
         (
             new_assigned.withColumnRenamed("_id", self.id_col)
-            .withColumnRenamed("_v", "c_vec")
             .withColumn("ingest_batch", F.lit(int(batch_id)))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -1,5 +1,6 @@
-"""Engine-exact (oracle-replayable) IVF / IVF-PQ: persisted index ==
-one-shot bit-equality, partition pruning, layout-invariant fits,
+"""Engine-exact (oracle-replayable) IVF / IVF-PQ / LSH: persisted index
+== one-shot bit-equality, frozen-quantizer append + compaction,
+partition pruning, the format sidecar, layout-invariant fits,
 recall-gate behavior, planted-duplicate retrieval."""
 
 from __future__ import annotations
@@ -53,6 +54,96 @@ def test_ivfpq_exact_index_matches_oneshot(spark, sf_dir, tmp_path):
     via_index = query_ivfpq_index_exact(spark, path, queries, k=5)
     oneshot = ann_topk_ivfpq_exact(corpus=corpus, queries=queries, k=5)
     assert _rows(via_index) == _rows(oneshot)
+
+
+def _codes_rows(spark, path):
+    return sorted(
+        (r["neighbor_id"], r["cluster"], tuple(r["_ts"]))
+        for r in spark.read.parquet(f"{path}/codes").collect()
+    )
+
+
+def _scan_prunes_cluster(df):
+    """The code-table scan (the one reading the ``_ts`` code arrays —
+    its Location string may be abbreviated) carries a cluster
+    PartitionFilter."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln and "_ts" in ln]
+    return bool(scans) and any(
+        "PartitionFilters" in ln and "cluster" in ln for ln in scans
+    )
+
+
+def test_ivfpq_exact_append_equals_frozen_rebuild(spark, sf_dir, tmp_path):
+    """append(batch 2) after build(batch 1) holds exactly the codes of
+    the union encoded with the batch-1 quantizer (the FAISS
+    add-with-fixed-quantizer contract), and querying the grown index
+    equals the one-shot search with those artifacts. Re-delivering the
+    append is a no-op (dynamic partition overwrite); compaction folds
+    both tables to one leaf without changing codes or results or
+    losing the cluster PartitionFilter."""
+    import os
+
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (  # noqa: E501
+        _load_ivfpq_artifacts,
+        _unit,
+        append_ivfpq_index_exact,
+        compact_ivfpq_index_exact,
+        encode_codes_arrays,
+    )
+
+    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
+    queries = emb.filter(F.col("vec_id") < 10)
+    corpus = emb.filter(F.col("vec_id") >= 10)
+    b1 = corpus.filter(F.col("vec_id") % 3 != 0)
+    b2 = corpus.filter(F.col("vec_id") % 3 == 0)
+
+    inc = str(tmp_path / "inc")
+    build_ivfpq_index_exact(b1, inc)
+    append_ivfpq_index_exact(b2, inc, batch_id=1)
+
+    centers, books = _load_ivfpq_artifacts(spark, inc)
+    cn = _unit(corpus, "vec_id", "embedding", "neighbor_id", 64)
+    ref_codes = encode_codes_arrays(cn, centers, books).localCheckpoint()
+    want_codes = sorted(
+        (r["neighbor_id"], r["_cl"], tuple(r["_ts"]))
+        for r in ref_codes.collect()
+    )
+    assert _codes_rows(spark, inc) == want_codes and want_codes
+
+    expected = _rows(
+        ann_topk_ivfpq_exact(
+            corpus, queries, k=5, nprobe=4,
+            artifacts=(centers, books, ref_codes),
+        )
+    )
+    assert _rows(
+        query_ivfpq_index_exact(spark, inc, queries, k=5, nprobe=4)
+    ) == expected and expected
+
+    # retry the same batch: dynamic overwrite makes it exactly-once
+    append_ivfpq_index_exact(b2, inc, batch_id=1)
+    assert _codes_rows(spark, inc) == want_codes
+
+    def n_files(table):
+        return sum(
+            1
+            for _r, _d, files in os.walk(f"{inc}/{table}")
+            for fn in files
+            if fn.startswith("part-")
+        )
+
+    before = {f"{inc}/{t}": n_files(t) for t in ("codes", "vectors")}
+    assert compact_ivfpq_index_exact(spark, inc) == before
+    for t in ("codes", "vectors"):
+        assert n_files(t) < before[f"{inc}/{t}"]
+        assert [
+            d for d in os.listdir(f"{inc}/{t}") if d.startswith("ingest_batch=")
+        ] == ["ingest_batch=-1"]
+    assert _codes_rows(spark, inc) == want_codes
+    res = query_ivfpq_index_exact(spark, inc, queries, k=5, nprobe=4)
+    assert _rows(res) == expected
+    assert _scan_prunes_cluster(res)
 
 
 def test_fit_centroids_exact_layout_invariant(spark, sf_dir):
@@ -211,6 +302,49 @@ def test_lsh_index_matches_oneshot_and_prunes(spark, sf_dir, tmp_path):
     assert _rows(via_index) == _rows(oneshot)
     plan = via_index._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "_b" in plan
+
+
+def test_index_without_current_format_sidecar_fails_fast(
+    spark, sf_dir, tmp_path
+):
+    """Every persisted index carries a format sidecar; a query (or an
+    append) on an index whose sidecar is missing, old or of another
+    kind raises the rebuild error up front instead of a deep
+    AnalysisException on a column the old layout lacks."""
+    import os
+
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (  # noqa: E501
+        append_ivfpq_index_exact,
+        build_lsh_index_exact,
+        index_format_current,
+        query_lsh_index_exact,
+    )
+
+    emb = _emb(spark, sf_dir)
+    corpus = emb.filter(F.col("vec_id") >= 10)
+    queries = emb.filter(F.col("vec_id") < 10)
+    path = str(tmp_path / "lshx")
+    build_lsh_index_exact(corpus, path, num_planes=4, dim=64)
+    assert index_format_current(path) and index_format_current(path, "lsh")
+    assert not index_format_current(path, "ivf")
+
+    rebuild = r"rebuild the index \(layout v\d+\)"
+    with pytest.raises(ValueError, match=rebuild):
+        query_ivf_index_exact(spark, path, queries, k=5)
+    with pytest.raises(ValueError, match=rebuild):
+        query_ivfpq_index_exact(spark, path, queries, k=5)
+    with pytest.raises(ValueError, match=rebuild):
+        append_ivfpq_index_exact(corpus, path, batch_id=1)
+
+    sidecar = os.path.join(path, "_FORMAT")
+    with open(sidecar, "w") as fh:
+        fh.write("lsh v0\n")  # an older layout
+    assert not index_format_current(path)
+    with pytest.raises(ValueError, match=rebuild):
+        query_lsh_index_exact(spark, path, queries, k=5, num_planes=4)
+    os.remove(sidecar)  # an index written before the sidecar existed
+    with pytest.raises(ValueError, match=rebuild):
+        query_lsh_index_exact(spark, path, queries, k=5, num_planes=4)
 
 
 def test_lsh_index_matches_oneshot_wide_dim(spark, sf_dir, tmp_path):

@@ -58,29 +58,6 @@ def test_knn_graph_chunked_equals_single_chunk(spark):
     assert {(a, b, r) for a, b, r, _ in one} == _brute_force(mat, 4)
 
 
-def test_ivf_graph_finds_planted_duplicates(spark):
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        ann_knn_graph_ivf,
-    )
-
-    mat = _vectors(n=60, dim=12, seed=11)
-    rows = [(i, [float(x) for x in row]) for i, row in enumerate(mat)]
-    # plant near-identical twins: 100+i duplicates vector i (tiny jitter)
-    rows += [
-        (100 + i, [float(x) + 0.001 for x in mat[i]]) for i in range(10)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = ann_knn_graph_ivf(df, k=3, n_clusters=4, nprobe=2).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.query_id, []).append(r.neighbor_id)
-    # a twin is (near) cosine-1: same cluster by construction, so the
-    # IVF graph must rank it as the #1 neighbor on both sides
-    for i in range(10):
-        assert by_q[100 + i][0] == i
-        assert by_q[i][0] == 100 + i
-
-
 def test_hard_negatives_are_cross_label_and_exact(spark):
     import numpy as np
 

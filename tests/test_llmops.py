@@ -1,5 +1,5 @@
 """LLM-pipeline operator tests: dedup correctness on constructed
-duplicates, LSH recall vs exact ground truth, text-analysis semantics,
+duplicates, recall@k edge cases, text-analysis semantics,
 multimodal plumbing determinism."""
 
 from __future__ import annotations
@@ -19,8 +19,6 @@ from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.multimodal impor
     with_media_meta,
 )
 from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-    ann_topk_ivf,
-    ann_topk_lsh,
     cosine_topk,
     with_recall_at_k,
 )
@@ -177,27 +175,6 @@ def test_cosine_topk_self_is_nearest(spark, sf_dir):
         assert r.cosine == pytest.approx(1.0, abs=1e-6)
 
 
-def test_ann_recall_floors(spark, sf_dir):
-    # Floors assert on the recall_at_k column the queries now emit —
-    # the same number the driver's result snapshots record.
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = cosine_topk(corpus, queries, 5)
-    ivf = with_recall_at_k(ann_topk_ivf(corpus, queries, 5), exact, 5)
-    lsh = with_recall_at_k(
-        ann_topk_lsh(corpus, queries, 5, num_planes=4), exact, 5
-    )
-    # floors measured on the driver's synthetic (near-uniform) embeddings —
-    # the hardest case for ANN; real clustered embeddings do better
-    def mean_recall(df):
-        rows = df.select("query_id", "recall_at_k").distinct().collect()
-        return sum(r.recall_at_k for r in rows) / len(rows)
-
-    assert mean_recall(ivf) >= 0.5
-    assert mean_recall(lsh) >= 0.25
-
-
 def test_with_recall_at_k_edge_cases(spark):
     # all-miss: ann found neighbors, none in the exact top-k -> 0.0
     ann = spark.createDataFrame(
@@ -227,46 +204,6 @@ def test_with_recall_at_k_edge_cases(spark):
     )
     out2 = with_recall_at_k(ann2, exact.filter("query_id = 1"), k=2).collect()
     assert all(r.recall_at_k == 0.5 for r in out2)
-
-
-def test_recall_ok_gate_flips_on_degraded_index(spark, sf_dir):
-    # The recall_ok gate: a healthy ANN result carries recall_ok=True on
-    # every row; a degraded index (here: centroids fit on a 2-point
-    # sample with nprobe=1 — the degenerate-centroids failure mode, or
-    # in the worst case an ANN result disjoint from the exact top-k)
-    # must flip recall_ok to False in the EMITTED rows, so the driver's
-    # snapshot diff catches quality regressions without pytest.
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = cosine_topk(corpus, queries, 5)
-
-    healthy = with_recall_at_k(
-        ann_topk_ivf(corpus, queries, 5), exact, 5, min_mean_recall=0.5
-    )
-    rows = healthy.collect()
-    assert rows and all(r.recall_ok is True for r in rows)
-
-    # worst-case degradation: an "index" returning neighbors that don't
-    # exist in the exact top-k at all -> mean recall 0.0 < any floor
-    broken = exact.withColumn(
-        "neighbor_id", F.col("neighbor_id") + F.lit(10_000_000)
-    )
-    degraded = with_recall_at_k(broken, exact, 5, min_mean_recall=0.5)
-    rows = degraded.collect()
-    assert rows and all(r.recall_ok is False for r in rows)
-
-    # degenerate centroids (2-point fit sample, single probe) may still
-    # luck into candidates, but the gate column must be present and
-    # consistent with the mean of the emitted recall values
-    bad_ivf = ann_topk_ivf(
-        corpus, queries, 5, nprobe=1, fit_sample_limit=2
-    )
-    gated = with_recall_at_k(bad_ivf, exact, 5, min_mean_recall=0.5)
-    out = gated.select("query_id", "recall_at_k", "recall_ok").collect()
-    per_q = {r.query_id: r.recall_at_k for r in out}
-    mean = sum(per_q.values()) / len(per_q)
-    assert all(r.recall_ok == (mean >= 0.5) for r in out)
 
 
 def test_lang_id_marker_semantics(spark):
@@ -466,30 +403,6 @@ def test_sample_frames_every_n(spark):
     assert all(f == frames[i] for i, f in got)
 
 
-def test_ivf_index_build_query_matches_oneshot(spark, sf_dir, tmp_path):
-    import re
-
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        build_ivf_index,
-        query_ivf_index,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    queries = emb.filter(F.col("vec_id") < 10)
-    path = str(tmp_path / "ivf")
-    build_ivf_index(corpus, path)
-
-    got = query_ivf_index(spark, path, queries, k=5)
-    want = ann_topk_ivf(corpus, queries, k=5)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    # the probed-cluster IN-filter must reach the parquet scan as a
-    # PARTITION filter (unprobed cluster dirs are never read)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"PartitionFilters: \[[^\]]*cluster", plan)
-
-
 def test_char_shingles_semantics(spark):
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.text import (
         char_shingles,
@@ -520,171 +433,3 @@ def test_chargram_near_dup_catches_typo_word_shingles_miss(spark):
     ).count()
     assert word_pairs == 0
     assert char_pairs == 1
-
-
-# --- distributed Lloyd fit + SemDeDup -----------------------------------
-
-
-def _blob_rows(n_per, dim=8, seed=3):
-    import random
-
-    rng = random.Random(seed)
-    rows = []
-    for i in range(n_per):
-        # blob A hugs +e0, blob B hugs +e1 (unit-ish, well separated)
-        rows.append(Row(vec_id=i, embedding=[1.0] + [rng.uniform(-0.05, 0.05) for _ in range(dim - 1)]))
-        rows.append(Row(vec_id=n_per + i, embedding=[rng.uniform(-0.05, 0.05), 1.0] + [rng.uniform(-0.05, 0.05) for _ in range(dim - 2)]))
-    return rows
-
-
-def test_fit_centroids_distributed_separates_blobs(spark):
-    import numpy as np
-
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        _assign_factory,
-        fit_centroids_distributed,
-    )
-
-    df = spark.createDataFrame(_blob_rows(40))
-    centers = fit_centroids_distributed(df, n_clusters=2, iters=5)
-    assert centers.shape == (2, 8)
-    # unit-norm spherical centroids
-    assert np.allclose(np.linalg.norm(centers, axis=1), 1.0)
-    out = df.withColumn(
-        "cl", _assign_factory(centers)(F.col("embedding").cast("array<double>"))
-    ).collect()
-    a_clusters = {r.cl for r in out if r.vec_id < 40}
-    b_clusters = {r.cl for r in out if r.vec_id >= 40}
-    assert len(a_clusters) == 1 and len(b_clusters) == 1
-    assert a_clusters != b_clusters
-
-
-def test_fit_centroids_distributed_layout_invariant(spark):
-    import numpy as np
-
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        fit_centroids_distributed,
-    )
-
-    df = spark.createDataFrame(_blob_rows(30))
-    c1 = fit_centroids_distributed(df.repartition(1), n_clusters=2, iters=3)
-    c2 = fit_centroids_distributed(df.repartition(16, "vec_id"), n_clusters=2, iters=3)
-    # hash-ordered init makes the fit layout-independent up to float
-    # summation order inside the means
-    assert np.allclose(c1, c2, atol=1e-9)
-
-
-def test_distributed_centers_inject_into_ivf(spark):
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        ann_topk_ivf,
-        fit_centroids_distributed,
-    )
-
-    df = spark.createDataFrame(_blob_rows(30))
-    corpus, queries = df.filter("vec_id >= 4"), df.filter("vec_id < 4")
-    centers = fit_centroids_distributed(corpus, n_clusters=2, iters=3)
-    out = ann_topk_ivf(corpus, queries, k=3, nprobe=1, centers=centers).collect()
-    assert len(out) == 12  # 4 queries x 3
-    # nprobe=1 on separated blobs: every neighbor comes from blob A
-    assert all(r.neighbor_id < 30 + 4 for r in out)
-
-
-def test_semdedup_finds_planted_pairs_with_multiassign(spark):
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        cosine_pairs_exact,
-        semdedup_pairs,
-    )
-
-    base = _blob_rows(25)
-    # plant 3 exact duplicates of vec 0 (blob A) and one of vec 25 (blob B)
-    planted = [Row(vec_id=100 + j, embedding=base[0].embedding) for j in range(3)]
-    planted.append(Row(vec_id=110, embedding=base[1].embedding))
-    df = spark.createDataFrame(base + planted)
-    sem = semdedup_pairs(df, threshold=0.999, n_clusters=4, n_assign=2).collect()
-    got = {(r.id_a, r.id_b) for r in sem}
-    exact = {(r.id_a, r.id_b)
-             for r in cosine_pairs_exact(df, threshold=0.999).collect()}
-    # identical vectors always share their nearest clusters -> full recall
-    assert exact <= got == exact
-    assert {(100, 101), (100, 102), (101, 102)} <= got
-    # orientation + threshold respected
-    assert all(r.id_a < r.id_b and r.cosine >= 0.999 for r in sem)
-
-
-def test_lsh_recall_gate_flips_on_degraded_config(spark, sf_dir):
-    # The recall_ok gate must actually TRIP: 12 hyperplanes without
-    # multiprobe slice near-uniform vectors into ~4096 buckets, so a
-    # query's single probe bucket holds almost no true neighbors and
-    # mean recall collapses below the 0.25 floor. The production knobs
-    # (num_planes=4, multiprobe=True) restore it — both directions
-    # asserted against the SAME gate column the emitted snapshot
-    # carries, so this pins that a quality regression is visible.
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = cosine_topk(corpus, queries, 5)
-
-    bad = with_recall_at_k(
-        ann_topk_lsh(corpus, queries, 5, num_planes=12, multiprobe=False),
-        exact, 5, min_mean_recall=0.25,
-    )
-    assert bad.select("recall_ok").distinct().collect()[0].recall_ok is False
-
-    good = with_recall_at_k(
-        ann_topk_lsh(corpus, queries, 5, num_planes=4, multiprobe=True),
-        exact, 5, min_mean_recall=0.25,
-    )
-    assert good.select("recall_ok").distinct().collect()[0].recall_ok is True
-
-
-def test_ivfpq_planted_duplicate_and_recall(spark, sf_dir):
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        ann_topk_ivfpq,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    queries = emb.filter(F.col("vec_id") < 10)
-    # plant each query INTO the corpus under a shifted id: IVF-PQ must
-    # return the exact duplicate as rank 1 with cosine ~1.0 (the refine
-    # step scores the shortlist exactly, so the dup cannot be outranked)
-    planted = corpus.unionByName(
-        queries.withColumn("vec_id", F.col("vec_id") + 100000)
-    )
-    out = ann_topk_ivfpq(corpus=planted, queries=queries, k=3)
-    top1 = {r.query_id: r for r in out.filter("rnk = 1").collect()}
-    assert len(top1) == 10
-    for qid, r in top1.items():
-        assert r.neighbor_id == qid + 100000
-        assert abs(r.cosine - 1.0) < 1e-6
-
-    # recall floor on the unplanted corpus (same floor as IVF-flat:
-    # refine makes PQ error a shortlist-quality issue only)
-    exact = cosine_topk(corpus, queries, 5)
-    pq = with_recall_at_k(
-        ann_topk_ivfpq(corpus, queries, 5), exact, 5, min_mean_recall=0.5
-    )
-    assert pq.select("recall_ok").distinct().collect()[0].recall_ok is True
-
-
-def test_pq_codes_shape_and_determinism(spark, sf_dir):
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        as_double,
-        fit_pq_codebooks,
-        pq_encode,
-    )
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("neighbor_id"),
-        as_double(F.col("embedding")).alias("c_vec"),
-    )
-    books = fit_pq_codebooks(emb, m=8, n_codes=16)
-    assert books.shape[0] == 8 and books.shape[1] == 16
-    enc = pq_encode(emb, books)
-    rows = enc.select("neighbor_id", "pq_codes").collect()
-    assert all(len(r.pq_codes) == 8 for r in rows)  # 8 bytes per vector
-    assert all(0 <= c < 16 for r in rows for c in r.pq_codes)
-    # layout-independence: a repartitioned copy encodes identically
-    enc2 = {r.neighbor_id: list(r.pq_codes)
-            for r in pq_encode(emb.repartition(7), books).collect()}
-    assert {r.neighbor_id: list(r.pq_codes) for r in rows} == enc2

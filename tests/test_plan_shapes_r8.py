@@ -53,24 +53,6 @@ def test_sole_blame_dataframe_plan_has_semi_and_anti(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_ivfpq_prunes_to_pq_codes(spark, sf_dir):
-    # the ADC scan path must carry pq_codes (8-16 tinyints), not the
-    # raw c_vec doubles — the refine fetch is the only raw-vector read
-    from pyspark.sql import functions as F
-
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        ann_topk_ivfpq,
-    )
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.registry import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    queries = emb.filter(F.col("vec_id") < 10)
-    plan = plan_of(ann_topk_ivfpq(corpus, queries, k=3))
-    assert "pq_codes" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_attribution_join_is_equi_keyed(spark, sf_dir):
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.analytics import (
         purchase_first_touch_attribution,

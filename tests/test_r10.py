@@ -157,86 +157,6 @@ def test_jpeg_codec_roundtrip_and_multimodal_paths(spark):
     assert dist <= 8
 
 
-def test_ivfpq_index_append_equals_rebuild(spark, sf_dir, tmp_path):
-    """append(batch2) after build(batch1) is equivalent to building
-    over batch1 ∪ batch2 with the fit frozen on batch1 (the FAISS
-    add-with-fixed-quantizer contract): identical code-table rows and
-    identical probe results. Re-delivering the same append batch is a
-    no-op (dynamic partition overwrite), and compaction folds the
-    append leafs without changing results or losing the cluster
-    PartitionFilter."""
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        append_ivfpq_index,
-        build_ivfpq_index,
-        compact_ivfpq_index,
-        query_ivfpq_index,
-    )
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.registry import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    b1 = corpus.filter(F.col("vec_id") % 3 != 0)
-    b2 = corpus.filter(F.col("vec_id") % 3 == 0)
-
-    inc = str(tmp_path / "inc")
-    build_ivfpq_index(b1, inc)
-    append_ivfpq_index(b2, inc, batch_id=1)
-
-    ref = str(tmp_path / "ref")
-    build_ivfpq_index(corpus, ref, fit_df=b1)
-
-    def codes_rows(path):
-        df = spark.read.parquet(f"{path}/codes")
-        return sorted(
-            (r.neighbor_id, r.cluster, tuple(r.pq_codes)) for r in df.collect()
-        )
-
-    assert codes_rows(inc) == codes_rows(ref) and len(codes_rows(inc)) > 0
-
-    def probe(path):
-        return sorted(
-            map(
-                tuple,
-                query_ivfpq_index(
-                    spark, path, corpus, queries, k=5, nprobe=4
-                ).collect(),
-            )
-        )
-
-    expected = probe(ref)
-    assert probe(inc) == expected and len(expected) > 0
-
-    # retry the same batch: dynamic overwrite makes it exactly-once
-    append_ivfpq_index(b2, inc, batch_id=1)
-    assert codes_rows(inc) == codes_rows(ref)
-
-    # fold: fewer files, same rows/results, pruning intact
-    import os
-
-    def n_files(path):
-        return sum(
-            1
-            for _r, _d, files in os.walk(f"{path}/codes")
-            for fn in files
-            if fn.startswith("part-")
-        )
-
-    before = n_files(inc)
-    assert compact_ivfpq_index(spark, inc) == before
-    assert n_files(inc) < before
-    assert codes_rows(inc) == codes_rows(ref)
-    res = query_ivfpq_index(spark, inc, corpus, queries, k=5, nprobe=4)
-    assert sorted(map(tuple, res.collect())) == expected
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    scans = [
-        ln for ln in plan.splitlines() if "FileScan" in ln and "codes" in ln
-    ]
-    assert scans and any(
-        "PartitionFilters" in ln and "cluster" in ln for ln in scans
-    )
-
-
 # --- RIFF/AVI Motion-JPEG container (vendored, public spec) -------------
 
 
@@ -426,126 +346,6 @@ def test_sentence_boilerplate_removal_semantics(spark):
     assert out[6].n_removed == 1 and out[6].clean_text == ""
     # short repeated 'Thanks' (norm 6 chars, 2 docs) never boiler
     assert "Thanks" in out[1].clean_text
-
-
-# --- Streaming IVF-PQ index ingest (r10, foreachBatch maintenance) ------
-
-
-def test_streaming_ivfpq_ingest_matches_batch_build(spark, sf_dir, tmp_path):
-    """Real Structured Streaming run (file source, maxFilesPerTrigger=1,
-    foreachBatch): batch 0 bootstraps the index, later batches append
-    with the quantizer frozen. End state == build-once over the union
-    with fit_df = batch 0 (the contract test_ivfpq_index_append_equals_
-    rebuild pins for direct calls, here THROUGH the engine), a restart
-    from the same checkpoint ingests only the new file, and compaction
-    preserves results + the cluster PartitionFilter."""
-    import glob
-    import os
-    import shutil
-
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        build_ivfpq_index,
-        query_ivfpq_index,
-    )
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.registry import load
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.streaming.annindex import (
-        StreamingIVFPQIngest,
-    )
-
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = emb.filter(F.col("vec_id") < 10)
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    parts = [corpus.filter(F.col("vec_id") % 4 == i) for i in range(4)]
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-
-    def land_file(i):
-        stage = str(tmp_path / f"stage{i}")
-        parts[i].coalesce(1).write.mode("overwrite").parquet(stage)
-        src = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = str(inp / f"b{i}.parquet")
-        shutil.move(src, dst)
-        # file-source ordering is by mod time: pin a strict order
-        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    for i in range(3):
-        land_file(i)
-
-    idx = str(tmp_path / "idx")
-    ingest = StreamingIVFPQIngest(idx)
-    ckpt = str(tmp_path / "ckpt")
-    schema = spark.read.parquet(str(inp / "b0.parquet")).schema
-
-    def run_stream():
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(inp))
-            .writeStream.foreachBatch(ingest.process_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        assert not q.isActive
-
-    run_stream()
-
-    ref3 = str(tmp_path / "ref3")
-    build_ivfpq_index(
-        parts[0].unionByName(parts[1]).unionByName(parts[2]),
-        ref3,
-        fit_df=parts[0],
-    )
-
-    def codes_rows(path):
-        df = spark.read.parquet(f"{path}/codes")
-        return sorted(
-            (r.neighbor_id, r.cluster, tuple(r.pq_codes)) for r in df.collect()
-        )
-
-    assert codes_rows(idx) == codes_rows(ref3) and len(codes_rows(idx)) > 0
-
-    # restart with one new file: the checkpoint replays nothing, the
-    # new file becomes batch 3, and the index now matches the 4-part
-    # reference (still fit-frozen on part 0)
-    land_file(3)
-    run_stream()
-    ref4 = str(tmp_path / "ref4")
-    full = parts[0]
-    for p in parts[1:]:
-        full = full.unionByName(p)
-    build_ivfpq_index(full, ref4, fit_df=parts[0])
-    assert codes_rows(idx) == codes_rows(ref4)
-
-    expected = sorted(
-        map(
-            tuple,
-            query_ivfpq_index(spark, ref4, corpus, queries, k=5, nprobe=4).collect(),
-        )
-    )
-    got = ingest.query(spark, queries, k=5, nprobe=4)
-    assert sorted(map(tuple, got.collect())) == expected and len(expected) > 0
-
-    # checkpoint-aware compaction: folds all committed leafs, results
-    # and the code-scan PartitionFilter survive
-    folded = ingest.compact(spark, checkpoint_dir=ckpt)
-    assert folded
-    leafs = [
-        d
-        for d in os.listdir(os.path.join(idx, "codes"))
-        if d.startswith("ingest_batch=")
-    ]
-    assert leafs == ["ingest_batch=-1"]
-    assert codes_rows(idx) == codes_rows(ref4)
-    res = ingest.query(spark, queries, k=5, nprobe=4)
-    assert sorted(map(tuple, res.collect())) == expected
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines() if "FileScan" in ln and "codes" in ln]
-    assert scans and any(
-        "PartitionFilters" in ln and "cluster" in ln for ln in scans
-    )
 
 
 # --- ISO-BMFF/MP4 Motion-JPEG container (vendored, public spec) ----------

@@ -196,94 +196,6 @@ def test_streaming_neardup_store_compaction(spark, sf_dir, tmp_path):
     assert leafs == ["ingest_batch=-2"]
 
 
-def test_streaming_semdedup_matches_batch(spark, sf_dir, tmp_path):
-    """Stretch ask from the r8 verdict: per-batch IVF-style assignment
-    + persisted vector store gives streaming SEMANTIC dedup. Two
-    micro-batches' alert union must equal the batch SemDeDup pair set
-    at the same threshold and the same pinned centers."""
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        _fit_centroids,
-        as_double,
-        semdedup_pairs,
-    )
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.registry import load
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.streaming.semdedup import (
-        StreamingSemDedup,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        as_double(F.col("embedding")).alias("c_vec"),
-    )
-    centers = _fit_centroids(c, 16, 42, 25_000)
-    # the synthetic embeddings have no >0.9-cosine semantic dups; 0.3
-    # yields a few hundred pairs, making the set equality non-vacuous
-    thr = 0.3
-
-    batch = sorted(
-        (r.id_a, r.id_b, r.cosine)
-        for r in semdedup_pairs(emb, threshold=thr, centers=centers).collect()
-    )
-    assert batch  # threshold chosen so the equality is non-vacuous
-
-    guard = StreamingSemDedup(
-        str(tmp_path / "sem"), threshold=thr, centers=centers
-    )
-    a0 = guard.process_batch(emb.filter(F.col("vec_id") % 2 == 0), 0)
-    a1 = guard.process_batch(emb.filter(F.col("vec_id") % 2 == 1), 1)
-    streamed = sorted(
-        {
-            (min(r.new_id, r.old_id), max(r.new_id, r.old_id), r.cosine)
-            for r in a0.unionByName(a1).collect()
-        }
-    )
-    assert streamed == batch
-
-    # re-delivery of batch 1 adds nothing new (store self-match guard)
-    a1_retry = guard.process_batch(emb.filter(F.col("vec_id") % 2 == 1), 1)
-    retried = {
-        (min(r.new_id, r.old_id), max(r.new_id, r.old_id), r.cosine)
-        for r in a1_retry.collect()
-    }
-    assert retried <= set(batch)
-
-    # compaction folds the store without changing future alerts
-    folded = guard.compact(spark, up_to_batch=1)
-    assert folded
-
-
-def test_ivfpq_index_matches_oneshot_and_prunes(spark, sf_dir, tmp_path):
-    """A fresh persisted IVF-PQ index returns BIT-identical rows to the
-    one-shot ann_topk_ivfpq (same seeds, same deterministic fits), and
-    its code scan partition-prunes to the probed clusters."""
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        ann_topk_ivfpq,
-        build_ivfpq_index,
-        query_ivfpq_index,
-    )
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.registry import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    queries = emb.filter(F.col("vec_id") < 10)
-    path = str(tmp_path / "ivfpq")
-    build_ivfpq_index(corpus, path)
-
-    via_index = query_ivfpq_index(spark, path, corpus, queries, k=5, nprobe=4)
-    oneshot = ann_topk_ivfpq(corpus=corpus, queries=queries, k=5, nprobe=4)
-    a = sorted(map(tuple, via_index.collect()))
-    b = sorted(map(tuple, oneshot.collect()))
-    assert a == b and len(a) > 0
-
-    # the code-table scan must carry a cluster PartitionFilter
-    plan = via_index._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines()
-             if "FileScan" in ln and "codes" in ln]
-    assert scans and any("PartitionFilters" in ln and "cluster" in ln
-                         for ln in scans)
-
-
 def test_tokenize_pack_single_exchange(spark, sf_dir):
     """corpus_tokenize_pack's only shuffle beyond the test-data fan-out
     (_docs' explicit repartition) is the packing window's
