@@ -17,14 +17,21 @@ flush (serverless.yml:34-37). The Spark-native equivalents:
   (``maxRecordsPerFile``) — one file == one ``_bulk`` POST body. The
   2000 ms flush interval maps to the streaming trigger
   (streaming/pipeline.py), not to this batch writer.
+
+``LogSink.ship`` runs the three as concurrent Spark jobs, the way
+logsene-js never blocks its handler on one delivery before the next.
 """
 
 from __future__ import annotations
 
 import os
+import secrets
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .config import DEFAULT_CONFIG, EngineConfig
 
@@ -162,6 +169,35 @@ def write_bulk_ndjson(
         )
 
 
+def run_concurrently(spark: SparkSession, jobs: list) -> list:
+    """Run each zero-argument job on its own driver thread; return their
+    results in job order once ALL have finished, or re-raise the first
+    failure (in job order) once all have finished.
+
+    Each job is wrapped on its own: ``inheritable_thread_target`` clones
+    the caller's local properties (job group, stream ids, scheduler
+    pool) once per wrap, and the child installs that object by
+    reference. Each write then sets its own ``spark.sql.execution.id``
+    on it, so the threads must not share one clone."""
+    with ThreadPoolExecutor(max_workers=len(jobs),
+                            thread_name_prefix="logsink") as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(job))
+                   for job in jobs]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        raise errors[0]
+    return [f.result() for f in futures]
+
+
+def batch_mode_key() -> int:
+    """The bulk key's batch part for a ship without a ``batch_id``:
+    fixed for the call, so task retries inside it resend the same keys;
+    62 random bits, so two batch-mode ships (from any process) do not
+    share keys and the second cannot overwrite the first; negative, so it
+    never names a streaming batch (ids count up from 0)."""
+    return -1 - secrets.randbits(62)
+
+
 class LogSink:
     """Batch shipper: routes (clean, dlq) to the log table, the DLQ path,
     and optionally the bulk NDJSON staging dir — the Spark analog of
@@ -184,26 +220,58 @@ class LogSink:
     def ship(
         self, clean: DataFrame, dlq: DataFrame, mode: str = "append",
         batch_id: int | None = None,
-    ) -> None:
+    ) -> dict | None:
         """Route a batch to the sinks. Pass the foreachBatch ``batch_id``
         to make the ship idempotent under micro-batch retry (exactly-once
-        to the tables); omit it for plain batch append."""
-        write_log_table(clean, self.log_table, mode=mode, batch_id=batch_id)
-        write_dlq(dlq, self.dlq_path, mode=mode, batch_id=batch_id)
-        if self.bulk:
-            if self.transport_factory is not None:
-                from .transport import ship_bulks
+        to the tables); omit it for plain batch append.
 
-                ship_bulks(
-                    clean,
-                    self.transport_factory,
-                    bulk_size=self.config.bulk_size,
-                    batch_id=batch_id or 0,
-                )
-            else:
-                write_bulk_ndjson(clean, self.bulk_path,
-                                  bulk_size=self.config.bulk_size, mode=mode,
-                                  batch_id=batch_id)
+        The log-table write, the DLQ write and the bulk delivery run as
+        concurrent Spark jobs, each on its own driver thread. Their cost
+        is fixed per batch and mostly driver-side (planning, the commit
+        protocol, the dynamic-overwrite rename, the HTTP round trips), so
+        a ship takes about the longest of the three rather than their
+        sum. Each thread inherits the caller's Spark local properties, so
+        a stream's sink jobs stay in its job group and ``query.stop()``
+        cancels them. When ``clean`` and ``dlq`` come from one persisted
+        frame, the concurrent readers of a cached partition wait on
+        Spark's block lock, so the frame is still computed once.
+
+        ``ship`` returns or raises only after every job has finished: on
+        a failure it waits for the sibling jobs, then re-raises the first
+        failure in the order log table, DLQ, bulk. A foreachBatch retry
+        under the same ``batch_id`` therefore never overlaps a write of
+        the failed attempt.
+
+        Ordering: the bulk does not wait for the table writes, so a
+        table-write failure can follow a delivered bulk. The retry then
+        re-sends the same (batch, partition, chunk) keys, which the
+        transport's idempotency contract covers (transport.py).
+
+        Returns the ``ship_bulks`` stats ({"n_bulks", "n_docs",
+        "n_partitions", "attempts"}) when a transport ran, else None.
+        """
+        jobs = [
+            partial(write_log_table, clean, self.log_table, mode=mode,
+                    batch_id=batch_id),
+            partial(write_dlq, dlq, self.dlq_path, mode=mode,
+                    batch_id=batch_id),
+        ]
+        shipping = self.bulk and self.transport_factory is not None
+        if shipping:
+            from .transport import ship_bulks
+
+            jobs.append(partial(
+                ship_bulks, clean, self.transport_factory,
+                bulk_size=self.config.bulk_size,
+                batch_id=batch_mode_key() if batch_id is None else batch_id,
+            ))
+        elif self.bulk:
+            jobs.append(partial(
+                write_bulk_ndjson, clean, self.bulk_path,
+                bulk_size=self.config.bulk_size, mode=mode, batch_id=batch_id,
+            ))
+        results = run_concurrently(clean.sparkSession, jobs)
+        return results[2] if shipping else None
 
     def maintain(
         self,

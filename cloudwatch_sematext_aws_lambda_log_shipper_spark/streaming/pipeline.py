@@ -9,9 +9,11 @@ Reference parity:
   downstream is identical.
 - per-invocation ship (shipper.js:150-153) -> ``foreachBatch`` running
   the SAME parse_kinesis_records -> split_dlq kernel as batch-mode
-  ``run_batch`` (composed inline with a decode fan-out and a persist()
-  between parse and the two sink writes — physical moves only; see
-  ``_ship_batch``), landing clean + DLQ via ``LogSink``.
+  ``run_batch`` (composed inline with a size-gated decode fan-out and
+  one persist() of the parsed batch — physical moves only; see
+  ``_ship_batch``), landing clean + DLQ (+ the ``_bulk`` delivery) via
+  ``LogSink.ship``, whose sink jobs run concurrently over that one
+  persisted parse.
 - delivery: checkpointed file-source offsets + batch_id-keyed dynamic
   partition OVERWRITE (ingest_batch=<id>) => exactly-once to the log
   table across restarts AND mid-batch failures/retries — a retried
@@ -88,14 +90,19 @@ class StreamingShipper:
         #    The kernel's expressions are built once per process, so
         #    this call only analyses and runs them.
         # 2. MATERIALIZE the parsed batch once: clean and DLQ are two
-        #    filter branches of one parse pipeline — written naively,
-        #    each write re-runs decode+parse end to end (gunzip twice).
-        #    persist() pins the parsed rows (bounded by the micro-batch
-        #    size, which a real deployment caps at the source) so both
-        #    sinks scan memory, and the explicit unpersist() releases
-        #    the blocks the moment the ship lands — a 2 s-trigger
-        #    stream must not leave per-batch blocks waiting on driver
-        #    GC (localCheckpoint cleanup) to free executor storage.
+        #    filter branches of one parse pipeline, and the bulk reads
+        #    clean again — written naively, each sink job re-runs
+        #    decode+parse end to end. persist() pins the parsed rows
+        #    (bounded by the micro-batch size, which a real deployment
+        #    caps at the source). LogSink.ship runs the log-table, DLQ
+        #    and bulk jobs concurrently; their tasks reading the same
+        #    cached partition wait on Spark's block write lock, so the
+        #    first computes it and the others scan memory. ship returns
+        #    only after all three jobs end, so the explicit unpersist()
+        #    never pulls blocks from under a running job, and it frees
+        #    them the moment the ship lands — a 2 s-trigger stream must
+        #    not leave per-batch blocks waiting on driver GC
+        #    (localCheckpoint cleanup) to free executor storage.
         from ..operators.parse import split_dlq
         from ..pipeline import batch_kernel
 

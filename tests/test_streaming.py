@@ -5,6 +5,7 @@ event-time windowed aggregation with watermark."""
 from __future__ import annotations
 
 import json
+import threading
 import time
 
 import pytest
@@ -130,6 +131,98 @@ def test_streaming_dlq_lands(spark, tmp_path):
     dlq = spark.read.parquet(str(out / "dlq"))
     [r] = dlq.collect()
     assert r["_raw"] == "AAAA"
+
+
+def _bulk_docs(bulk_dir):
+    """Docs of every published bulk file (action + doc line pairs)."""
+    import os
+
+    docs = []
+    for name in sorted(os.listdir(bulk_dir)):
+        if name.endswith(".ndjson"):
+            lines = open(os.path.join(bulk_dir, name)).read().splitlines()
+            docs += [json.loads(d) for d in lines[1::2]]
+    return docs
+
+
+def _write_clean_and_corrupt(inp):
+    event = {
+        "Records": [
+            {"kinesis": {"data": gzip_b64(payload(["one", "two error"]))},
+             "awsRegion": "r"},
+            {"kinesis": {"data": "AAAA"}, "awsRegion": "r"},  # not gzip
+        ]
+    }
+    (inp / "a.json").write_text(json.dumps(event) + "\n")
+
+
+def test_failed_bulk_fails_the_batch_and_restart_ships_once(spark, tmp_path):
+    """The sink jobs run concurrently, but a bulk whose retries run out
+    still fails the micro-batch with the transport's error, only after
+    the table writes ended (no sink thread outlives the ship). The
+    restart re-runs the batch under the same id: log and DLQ rows land
+    once, and every doc is delivered."""
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.transport import (
+        FileBulkTransport,
+        FlakyFileTransport,
+    )
+
+    inp = tmp_path / "in"
+    inp.mkdir()
+    _write_clean_and_corrupt(inp)
+    out, ckpt, bulk = tmp_path / "out", str(tmp_path / "ck"), str(tmp_path / "bulk")
+
+    shipper = StreamingShipper(spark, str(inp), str(out), ckpt, bulk=True)
+    shipper.sink.transport_factory = lambda: FlakyFileTransport(bulk, fail_times=10)
+    query = shipper.start(available_now=True)
+    with pytest.raises(Exception, match="injected failure"):
+        query.awaitTermination(120)
+    assert not query.isActive
+    assert [t.name for t in threading.enumerate()
+            if t.name.startswith("logsink")] == []
+    assert _bulk_docs(bulk) == []
+
+    shipper = StreamingShipper(spark, str(inp), str(out), ckpt, bulk=True)
+    shipper.sink.transport_factory = lambda: FileBulkTransport(bulk)
+    wait_done(shipper.start(available_now=True))
+    logs = spark.read.parquet(str(out / "logs"))
+    assert sorted(r.message for r in logs.collect()) == ["one", "two error"]
+    assert [r["_raw"] for r in spark.read.parquet(str(out / "dlq")).collect()] == ["AAAA"]
+    assert sorted(d["message"] for d in _bulk_docs(bulk)) == ["one", "two error"]
+
+
+def test_stream_sink_jobs_carry_the_stream_job_group(spark, tmp_path):
+    """Each sink job runs on its own driver thread; the thread inherits
+    the stream's local properties, so the log, DLQ and bulk jobs stay in
+    the query's job group (what query.stop() cancels) and no job of the
+    micro-batch runs outside it."""
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.transport import (
+        FileBulkTransport,
+    )
+
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    inp = tmp_path / "in"
+    inp.mkdir()
+    _write_clean_and_corrupt(inp)
+    bulk = str(tmp_path / "bulk")
+    shipper = StreamingShipper(
+        spark, str(inp), str(tmp_path / "out"), str(tmp_path / "ck"), bulk=True
+    )
+    shipper.sink.transport_factory = lambda: FileBulkTransport(bulk)
+    query = shipper.start(available_now=True)
+    wait_done(query)
+    assert len(_bulk_docs(bulk)) == 2
+
+    # the status store fills from the listener bus, asynchronously
+    group = []
+    for _ in range(100):
+        group = tracker.getJobIdsForGroup(str(query.runId))
+        if len(group) >= 3:
+            break
+        time.sleep(0.1)
+    assert len(group) >= 3, group  # log table + DLQ + bulk, one batch
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before
 
 
 def test_windowed_severity_counts_streaming(spark, tmp_path):

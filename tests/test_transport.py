@@ -120,5 +120,46 @@ def test_logsink_uses_injected_transport(spark, tmp_path):
     df = _docs_df(spark, 30).withColumn(
         "@timestamp", F.lit("2026-01-05 10:00:00").cast("timestamp")
     )
-    sink.ship(df, df.limit(0), batch_id=5)
+    stats = sink.ship(df, df.limit(0), batch_id=5)
     assert sorted(d["seq"] for d in _shipped_docs(out)) == list(range(30))
+    # the delivery stats come back instead of being discarded: 3
+    # partitions of 10 docs, one bulk each, no retries
+    assert stats == {"n_bulks": 3, "n_docs": 30, "n_partitions": 3,
+                     "attempts": 3}
+    # no transport, no delivery stats
+    assert LogSink(str(tmp_path / "plain")).ship(df, df.limit(0)) is None
+
+
+def test_batch_mode_ships_do_not_share_bulk_keys(spark, tmp_path):
+    """A ship without a batch_id gets a bulk key of its own: two
+    batch-mode ships (5 docs, then 3) through one transport leave all 8
+    docs, and neither touches streaming batch 0's bulk files."""
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.sink import LogSink
+
+    out = str(tmp_path / "bulkdir")
+
+    def sink(name):
+        # one table per layout (streaming vs batch), one bulk receiver
+        return LogSink(
+            str(tmp_path / name),
+            bulk=True,
+            transport_factory=lambda: FileBulkTransport(out),
+        )
+
+    df = _docs_df(spark, 8).coalesce(1).withColumn(
+        "@timestamp", F.lit("2026-01-05 10:00:00").cast("timestamp")
+    )
+    stream_df = df.filter("seq < 2").withColumn("seq", F.col("seq") + 100)
+    sink("stream").ship(stream_df, df.limit(0), batch_id=0)
+    batch0 = {n: open(os.path.join(out, n), "rb").read()
+              for n in os.listdir(out)}
+    assert list(batch0) == ["bulk-000000-00000-00000.ndjson"]
+
+    batch = sink("batch")
+    batch.ship(df.filter("seq < 5"), df.limit(0))
+    batch.ship(df.filter("seq >= 5"), df.limit(0))
+    assert sorted(d["seq"] for d in _shipped_docs(out)) == [
+        *range(8), 100, 101]
+    assert {n: open(os.path.join(out, n), "rb").read()
+            for n in batch0} == batch0
+    assert len(os.listdir(out)) == 3
