@@ -59,8 +59,9 @@ def _observe_exprs() -> list[Column]:
     ]
 
 
-# Planned input size from which batch_kernel(fan_out=True) repartitions
-# (see its docstring for the measurement).
+# Planned input size from which a batch is large (is_large_batch):
+# batch_kernel(fan_out=True) repartitions it (see its docstring for the
+# measurement) and the streaming shipper ships its sink jobs serially.
 FAN_OUT_MIN_BYTES = 1 << 20
 
 
@@ -69,6 +70,15 @@ def _planned_bytes(df: DataFrame) -> int:
     source's files; a source that cannot tell reports
     spark.sql.defaultSizeInBytes (Long.MaxValue)."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def is_large_batch(records: DataFrame) -> bool:
+    """Whether the batch's planned input reaches FAN_OUT_MIN_BYTES. A
+    large batch's time goes to its tasks rather than to the driver's
+    fixed cost per job: batch_kernel fans out its decode, and the
+    streaming shipper runs its sink jobs one after another instead of
+    overlapping them (streaming/pipeline._ship_batch)."""
+    return _planned_bytes(records) >= FAN_OUT_MIN_BYTES
 
 
 def batch_kernel(
@@ -99,7 +109,7 @@ def batch_kernel(
     noise), 1.07 MB 2.54 / 2.08 s (4 pairs), 3.56 MB 4.58 / 2.97 s
     (2 pairs).
     """
-    if fan_out and _planned_bytes(records) >= FAN_OUT_MIN_BYTES:
+    if fan_out and is_large_batch(records):
         par = records.sparkSession.sparkContext.defaultParallelism
         if records.rdd.getNumPartitions() < par:
             records = records.repartition(par)

@@ -18,8 +18,10 @@ flush (serverless.yml:34-37). The Spark-native equivalents:
   2000 ms flush interval maps to the streaming trigger
   (streaming/pipeline.py), not to this batch writer.
 
-``LogSink.ship`` runs the three as concurrent Spark jobs, the way
-logsene-js never blocks its handler on one delivery before the next.
+``LogSink.ship(concurrent=True)`` runs the three as concurrent Spark
+jobs, the way logsene-js never blocks its handler on one delivery
+before the next; the streaming shipper asks for it on small
+micro-batches only.
 """
 
 from __future__ import annotations
@@ -219,33 +221,40 @@ class LogSink:
 
     def ship(
         self, clean: DataFrame, dlq: DataFrame, mode: str = "append",
-        batch_id: int | None = None,
+        batch_id: int | None = None, concurrent: bool = False,
     ) -> dict | None:
         """Route a batch to the sinks. Pass the foreachBatch ``batch_id``
         to make the ship idempotent under micro-batch retry (exactly-once
         to the tables); omit it for plain batch append.
 
-        The log-table write, the DLQ write and the bulk delivery run as
-        concurrent Spark jobs, each on its own driver thread. Their cost
-        is fixed per batch and mostly driver-side (planning, the commit
-        protocol, the dynamic-overwrite rename, the HTTP round trips), so
-        a ship takes about the longest of the three rather than their
-        sum. Each thread inherits the caller's Spark local properties, so
-        a stream's sink jobs stay in its job group and ``query.stop()``
+        The sink jobs are the log-table write, the DLQ write and the bulk
+        delivery, run in that order. With ``concurrent`` they run as
+        concurrent Spark jobs instead, each on its own driver thread (see
+        ``run_concurrently``). That pays when the jobs' cost is fixed per
+        batch and mostly driver-side (planning, the commit protocol, the
+        dynamic-overwrite rename, the HTTP round trips): the ship then
+        takes about the longest job rather than the sum. The streaming
+        shipper asks for it only on batches below FAN_OUT_MIN_BYTES of
+        planned input (pipeline.is_large_batch). A large batch's jobs
+        are bound by their tasks; on those ``scripts/stream_scale.py``
+        at x100 ran slower with the overlap, and hung once (CHANGES.md).
+        Each thread inherits the caller's Spark local properties, so a
+        stream's sink jobs stay in its job group and ``query.stop()``
         cancels them. When ``clean`` and ``dlq`` come from one persisted
         frame, the concurrent readers of a cached partition wait on
         Spark's block lock, so the frame is still computed once.
 
-        ``ship`` returns or raises only after every job has finished: on
-        a failure it waits for the sibling jobs, then re-raises the first
-        failure in the order log table, DLQ, bulk. A foreachBatch retry
-        under the same ``batch_id`` therefore never overlaps a write of
-        the failed attempt.
+        A concurrent ship returns or raises only after every job has
+        finished: on a failure it waits for the sibling jobs, then
+        re-raises the first failure in the order log table, DLQ, bulk. A
+        foreachBatch retry under the same ``batch_id`` therefore never
+        overlaps a write of the failed attempt.
 
-        Ordering: the bulk does not wait for the table writes, so a
-        table-write failure can follow a delivered bulk. The retry then
-        re-sends the same (batch, partition, chunk) keys, which the
-        transport's idempotency contract covers (transport.py).
+        Ordering: in a concurrent ship the bulk does not wait for the
+        table writes, so a table-write failure can follow a delivered
+        bulk. The retry then re-sends the same (batch, partition, chunk)
+        keys, which the transport's idempotency contract covers
+        (transport.py).
 
         Returns the ``ship_bulks`` stats ({"n_bulks", "n_docs",
         "n_partitions", "attempts"}) when a transport ran, else None.
@@ -270,7 +279,10 @@ class LogSink:
                 write_bulk_ndjson, clean, self.bulk_path,
                 bulk_size=self.config.bulk_size, mode=mode, batch_id=batch_id,
             ))
-        results = run_concurrently(clean.sparkSession, jobs)
+        if concurrent:
+            results = run_concurrently(clean.sparkSession, jobs)
+        else:
+            results = [job() for job in jobs]
         return results[2] if shipping else None
 
     def maintain(

@@ -13,7 +13,7 @@ Reference parity:
   one persist() of the parsed batch — physical moves only; see
   ``_ship_batch``), landing clean + DLQ (+ the ``_bulk`` delivery) via
   ``LogSink.ship``, whose sink jobs run concurrently over that one
-  persisted parse.
+  persisted parse when the batch is small.
 - delivery: checkpointed file-source offsets + batch_id-keyed dynamic
   partition OVERWRITE (ingest_batch=<id>) => exactly-once to the log
   table across restarts AND mid-batch failures/retries — a retried
@@ -78,8 +78,8 @@ class StreamingShipper:
         # callers (r14 ADVICE: the inline recomposition here could
         # silently diverge from run_batch; test_streaming.py pins
         # streaming output == run_batch output on the same batch) —
-        # with two streaming-only physical moves (r14, profiled —
-        # neither changes a value, both cut wall-clock):
+        # with three streaming-only physical moves (profiled — none
+        # changes a value, each cuts wall-clock):
         # 1. FAN OUT the decode (batch_kernel(fan_out=True)): a
         #    file/Kinesis micro-batch arrives in as few partitions as
         #    source files/shards, and the gunzip UDF is the pipeline's
@@ -94,22 +94,28 @@ class StreamingShipper:
         #    clean again — written naively, each sink job re-runs
         #    decode+parse end to end. persist() pins the parsed rows
         #    (bounded by the micro-batch size, which a real deployment
-        #    caps at the source). LogSink.ship runs the log-table, DLQ
-        #    and bulk jobs concurrently; their tasks reading the same
-        #    cached partition wait on Spark's block write lock, so the
-        #    first computes it and the others scan memory. ship returns
-        #    only after all three jobs end, so the explicit unpersist()
-        #    never pulls blocks from under a running job, and it frees
-        #    them the moment the ship lands — a 2 s-trigger stream must
-        #    not leave per-batch blocks waiting on driver GC
-        #    (localCheckpoint cleanup) to free executor storage.
+        #    caps at the source). ship returns only after its last sink
+        #    job ends, so the explicit unpersist() never pulls blocks
+        #    from under a running job, and it frees them the moment the
+        #    ship lands — a 2 s-trigger stream must not leave per-batch
+        #    blocks waiting on driver GC (localCheckpoint cleanup) to
+        #    free executor storage.
+        # 3. OVERLAP the sink jobs of a SMALL batch (below the same
+        #    FAN_OUT_MIN_BYTES): its log-table, DLQ and bulk jobs cost
+        #    mostly driver-side fixed time, so LogSink.ship runs them
+        #    concurrently; their tasks reading the same cached partition
+        #    wait on Spark's block write lock, so the first computes it
+        #    and the others scan memory. A large batch's jobs are bound
+        #    by their tasks and ship one after another (there the
+        #    overlap ran slower and once hung).
         from ..operators.parse import split_dlq
-        from ..pipeline import batch_kernel
+        from ..pipeline import batch_kernel, is_large_batch
 
+        small = not is_large_batch(batch_df)
         parsed = batch_kernel(batch_df, fan_out=True).persist()
         try:
             clean, dlq = split_dlq(parsed)
-            self.sink.ship(clean, dlq, batch_id=batch_id)
+            self.sink.ship(clean, dlq, batch_id=batch_id, concurrent=small)
         finally:
             parsed.unpersist()
 

@@ -116,6 +116,13 @@ class HttpBulkTransport(BulkTransport):
     :class:`TransportError`, engaging the seam's bounded
     retry/backoff.
 
+    A stock ES ``_bulk`` endpoint ignores that header, so every
+    redelivery indexes the docs again. That includes a foreachBatch
+    retry after a log-table or DLQ write failed: ``LogSink.ship`` does
+    not hold the bulk back until the table writes land, so the retry
+    resends bulks that were already delivered. The docs need a
+    deterministic ``_id`` to close this (ROADMAP item 1).
+
     Construct executor-side via a zero-arg factory (one connection
     context per partition); ``extra_headers`` carries auth tokens the
     way logsene-js sends the app token."""

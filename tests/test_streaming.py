@@ -225,6 +225,39 @@ def test_stream_sink_jobs_carry_the_stream_job_group(spark, tmp_path):
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before
 
 
+def test_only_small_batches_overlap_their_sink_jobs(spark, tmp_path, monkeypatch):
+    """A micro-batch below FAN_OUT_MIN_BYTES of planned input ships its
+    sink jobs concurrently; a batch at or above it ships them one after
+    another, because its jobs are bound by their tasks. Both land the
+    same rows."""
+    import cloudwatch_sematext_aws_lambda_log_shipper_spark.pipeline as kernel
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.sink import LogSink
+
+    modes = []
+    ship = LogSink.ship
+
+    def recording_ship(self, *args, **kwargs):
+        modes.append(kwargs.get("concurrent", False))
+        return ship(self, *args, **kwargs)
+
+    monkeypatch.setattr(LogSink, "ship", recording_ship)
+    inp = tmp_path / "in"
+    inp.mkdir()
+    _write_clean_and_corrupt(inp)
+    landed = []
+    # the real gate first, then one that every batch reaches
+    for name, min_bytes in (("small", kernel.FAN_OUT_MIN_BYTES), ("large", 0)):
+        monkeypatch.setattr(kernel, "FAN_OUT_MIN_BYTES", min_bytes)
+        out = tmp_path / name
+        wait_done(StreamingShipper(spark, str(inp), str(out),
+                                   str(tmp_path / f"ck_{name}"))
+                  .start(available_now=True))
+        logs = spark.read.parquet(str(out / "logs")).collect()
+        landed.append(sorted(r.message for r in logs))
+    assert modes == [True, False]
+    assert landed == [["one", "two error"]] * 2
+
+
 def test_windowed_severity_counts_streaming(spark, tmp_path):
     inp = tmp_path / "in"
     inp.mkdir()
